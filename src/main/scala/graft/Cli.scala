@@ -326,7 +326,7 @@ object Cli {
         }
         // r18: the PRODUCTION overlap page routes through the kmvPairs
         // dispatch front door (the measured |S| > 64 crossover governs a
-        // real path now, not just the Profile instrument) — q132/q134
+        // real path now, not just a stage-isolation A/B) — q132/q134
         // above stay stage-PINNED as the two stages' oracle anchors.
         // The dispatch choice and its statistics land IN the audit
         // output as their own one-row page, not just on stderr.

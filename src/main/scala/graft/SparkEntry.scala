@@ -36,7 +36,7 @@ object SparkEntry {
   private val pairExpansion = Set(
     "q31_ngram_jaccard", "q76_containment", "q99_minhash_error")
   // r13c candidates MEASURED OUT of the class by the interleaved
-  // in-JVM A/B (Profile shufab — the instrument that removes the
+  // in-JVM A/B (interleaving the arms in one JVM removes the
   // window drift which first misread q119 as spilling: back-to-back
   // ScaleCheck JVMs read 57 s and 4.3 s for the SAME cores posture):
   // q119 sf10 min 4.09 s at 32 vs 5.38 at 512, q121 4.51 vs 15.60 —

@@ -353,8 +353,8 @@ object Multimodal {
     * FingerprintMinBytes = 125 ≫ 8): for any pair with
     * na ≤ nb ≤ na + Slack, cls(nb) ∈ {cls(na), cls(na+Slack)}, so the
     * join on the exploded class matches; the existing candidate
-    * distinct() absorbs the ≤2× emission. Measured on/off by Profile
-    * `mediacand` (BASELINE.md r16) — at the current corpus the verified
+    * distinct() absorbs the ≤2× emission. Measured on/off in
+    * BASELINE.md r16 — at the current corpus the verified
     * pair set is IDENTICAL with the knob on.
     */
   val SizeClassSlack = 8
@@ -384,7 +384,7 @@ object Multimodal {
     * and why enabling it at the 1e9-doc tier is a decision to read off
     * q131's datasheet WITH this caveat, not a free win. On THIS corpus
     * the verified pair set is identical on/off (measured at two scales
-    * by `Profile mediacand` and value-pinned in the suite) — the
+    * in BASELINE.md r16/r17 and value-pinned in the suite) — the
     * caveat is about what the corpus could contain, not what it does.
     */
   val SizeClassFlag = "spark.graft.mediaSizeClasses"

@@ -132,36 +132,28 @@ object AuditOps {
     * exists to surface first.
     */
   private def dupSpans(s: SparkSession, d: String): DataFrame =
-    graft.util.Caches.sharedIndex(s, s"dupSpans:$d")(
-      dupSpansBuild(s, d, persistTriples = true))
+    graft.util.Caches.sharedIndex(s, s"dupSpans:$d")(dupSpansBuild(s, d))
 
-  /** Kernel body with the triple-materialization choice exposed for the
-    * Profile `dupspanab` harness: persist = one generate + a token-
-    * volume transient persist (the shipped shape); recompute = two
-    * generates (owner agg + attribution join each run their own), zero
-    * persist footprint. The A/B that justifies the default lives in
-    * BASELINE.md r13c.
+  /** Kernel body: one generate + a token-volume transient persist of
+    * the triples, which the owner aggregation and the attribution join
+    * both read. Recomputing them instead (two generates, zero persist
+    * footprint) measured a dead heat whose sign flips between sf0.1 and
+    * sf10 — BASELINE.md r13c records the A/B.
     */
-  private[graft] def dupSpansBuild(s: SparkSession, d: String,
-      persistTriples: Boolean, salted: Boolean = true): DataFrame = {
+  private def dupSpansBuild(s: SparkSession, d: String): DataFrame = {
       val docs = documents(s, d).filter(col("text").isNotNull)
-      val triBase =
+      val tri = graft.util.Caches.transientPersist(
         docs.selectExpr("doc_id", "posngrams(text, 8) AS (pos, g)")
           .select(col("doc_id"), col("pos").cast("long").as("pos"),
-            Hashing.md5Long(col("g")).as("h1"))
-      val tri =
-        if (persistTriples) graft.util.Caches.transientPersist(triBase)
-        else triBase
-      dupSpansOver(s, tri, salted)
+            Hashing.md5Long(col("g")).as("h1")))
+      dupSpansOver(tri)
   }
 
-  /** The kernel body over an arbitrary (doc_id, pos, h1) triples frame —
-    * factored (r14) so a PERSISTED positional tier can feed it (the
-    * `postriab` pricing harness and, if it wins, an index seam) without
-    * duplicating the owner/attribution/islands logic.
+  /** The kernel body over a (doc_id, pos, h1) triples frame. A persisted
+    * positional tier feeding it was priced and rejected (BASELINE.md
+    * r14).
     */
-  private[graft] def dupSpansOver(s: SparkSession, tri: DataFrame,
-      salted: Boolean = true): DataFrame = {
+  private def dupSpansOver(tri: DataFrame): DataFrame = {
       import org.apache.spark.sql.expressions.Window
       // owner/df straight off the positions in ONE aggregation (r19 —
       // the q107 min/max rule): the pre-r19 form pre-deduped to
@@ -174,7 +166,7 @@ object AuditOps {
       // boilerplate grams cannot spill a reducer) into one h1 exchange
       // replaces both. Same owner set by construction; oracle-diffed
       // (the DuckDB face keeps its DISTINCT + HAVING count(*) ≥ 2 form).
-      // Measured (Profile q119parts, warm triples, min-of-5): owners
+      // Measured (OPTIMIZATION_r19.md, warm triples, min-of-5): owners
       // stage 0.62 → 0.32 s, full kernel 1.25 → 0.63 s.
       val owners = tri.groupBy("h1")
         .agg(min("doc_id").as("owner"), max("doc_id").as("mx"))
@@ -202,11 +194,10 @@ object AuditOps {
       // 1.73 MB (1.77× median) → 1.16 MB (1.18× median), results
       // identical (the full 125-query oracle gate).
       val B = 8
-      val hits = (if (salted) {
-        tri.withColumn("salt", pmod(col("doc_id"), lit(B)).cast("int"))
-          .join(owners.withColumn("salt",
-            explode(sequence(lit(0), lit(B - 1)))), Seq("h1", "salt"))
-      } else tri.join(owners, "h1"))
+      val hits = tri
+        .withColumn("salt", pmod(col("doc_id"), lit(B)).cast("int"))
+        .join(owners.withColumn("salt",
+          explode(sequence(lit(0), lit(B - 1)))), Seq("h1", "salt"))
         .filter(col("doc_id") =!= col("owner"))
         .select("doc_id", "pos")
       val wOrd = Window.partitionBy("doc_id").orderBy("pos")
@@ -257,13 +248,14 @@ object AuditOps {
     * see q121's registry comment for the scale story.
     */
   private def noveltyFrame(s: SparkSession, d: String): DataFrame =
-    // r18 kernel promotion (Profile kcacheab): the doc comment always
-    // called this "X105's shared frame ... consumed by the q121 report
-    // and the q123 triage composite", but each consumer re-ran the
+    // r18 kernel promotion (BASELINE.md r18 OPTIMIZATION phase): the
+    // doc comment always called this "X105's shared frame ... consumed
+    // by the q121 report and the q123 triage composite", but each
+    // consumer re-ran the
     // corpus-wide standing-distinct + membership join. Batch-sized
     // narrow frame; key carries the fpIndex seam (shinglePostings is
     // seam-aware).
-    graft.util.Caches.sharedIndexIf(s,
+    graft.util.Caches.sharedIndex(s,
       s"noveltyFrame:$d" + TrainingOps.fpKey(s))(noveltyFrameBuild(s, d))
 
   private def noveltyFrameBuild(s: SparkSession, d: String): DataFrame = {
@@ -279,7 +271,7 @@ object AuditOps {
       // seam path the same — and `standing` is unique per h1, so the left
       // join is 1:1. countDistinct re-ran a distinct expansion (an extra
       // aggregate phase per countDistinct) over already-unique keys.
-      // Same integers by construction; Profile kcacheab A/B'd the frame.
+      // Same integers by construction (BASELINE.md r18 A/B).
       .agg(count(col("h1")).as("n_shingles"),
         sum(when(col("seen").isNotNull, 1L).otherwise(0L)).as("n_seen"))
       .select(col("doc_id"), col("n_shingles"), col("n_seen"),
@@ -364,7 +356,7 @@ object AuditOps {
     // on the exploded size class (≤ 2 classes per doc — the ±slack
     // emission keeps the ≤ 4-hamming contract exhaustive; Multimodal
     // .sizeClassesOf). A COST knob only: the verified pair set is
-    // identical on/off (measured at two scales by Profile mediacand,
+    // identical on/off (measured at two scales, BASELINE.md r16/r17;
     // value-pinned in AuditSpec); the candidate distinct absorbs the
     // ≤ 2× emission. Cache-keyed separately so a session toggling the
     // flag never serves the other posture's kernel.
@@ -412,12 +404,12 @@ object AuditOps {
     * spine join is planner-gated.
     */
   private def mediaVerdicts(s: SparkSession, d: String): DataFrame =
-    // r18 kernel promotion (Profile kcacheab): two consumers (q127 and
-    // q123's media column) each re-ran the filter + best-partner window
+    // r18 kernel promotion (BASELINE.md r18 OPTIMIZATION phase): two
+    // consumers (q127 and q123's media column) each re-ran the filter + best-partner window
     // + spine join over the cached mediaPairs kernel. Batch-sized
     // narrow frame; key mirrors mediaPairs' (seam dir + size-class
     // flag) so postures can never serve each other.
-    graft.util.Caches.sharedIndexIf(s,
+    graft.util.Caches.sharedIndex(s,
       s"mediaVerdicts:$d${TrainingOps.fpIndexDir(s).fold("")(x => s"@idx=$x")}" +
         (if (graft.multimodal.Multimodal.sizeClassesOn(s)) "@scls" else ""))(
       mediaVerdictsBuild(s, d))
@@ -531,8 +523,8 @@ object AuditOps {
     * stops at the k-th union element, computing exactly the integers
     * the expression form (array_union → array_sort → element_at →
     * filter(array_intersect)) assembled through four O(k)
-    * allocate-and-hash passes. Measured (kmvscale, pair stage isolated,
-    * BASELINE r17): at |S|=140 banded 3.03 → 0.45 s and NL
+    * allocate-and-hash passes. Measured (pair stage isolated,
+    * BASELINE.md r17): at |S|=140 banded 3.03 → 0.45 s and NL
     * 5.10 → 0.35 s (the estimator WAS ~90% of both stages); at
     * |S|=2000 NL 12.6 vs banded 5.5 s — the crossover anchors hold
     * with banded still ~2× from the mid-hundreds on. Same integers,
@@ -567,7 +559,7 @@ object AuditOps {
     * signature frame — |S|²/2 bounded-cost rows, shuffle-free, the
     * right shape at the documented tens-of-sources contract. At
     * fine-grained provenance |S|²/2 dominates ([[kmvPairsBanded]] is
-    * the scale path; Profile `kmvscale` measures the crossover).
+    * the scale path; BASELINE.md r16/r17 record the crossover).
     */
   private[graft] def kmvPairsNL(sigs: DataFrame, k: Int = 256): DataFrame =
     kmvEstimate(k)(
@@ -604,8 +596,8 @@ object AuditOps {
   }
 
   /** The measured NL-win ceiling: NL is chosen only at |S| ≤ this. The
-    * r16 kmvscale table puts the crossover between |S|=20 (NL 1.35 s vs
-    * banded 1.61 — a noise-level margin at q132's tens-of-sources
+    * r16 stage-isolation table (BASELINE.md) puts the crossover
+    * between |S|=20 (NL 1.35 s vs banded 1.61 — a noise-level margin at q132's tens-of-sources
     * contract) and |S|=100 (banded ~2× and widening from there at EVERY
     * measured tier, dense sf0.1 and sparse sf10 alike); both stages are
     * sub-2 s anywhere under this ceiling, so the constant is uncritical.
@@ -617,7 +609,7 @@ object AuditOps {
     * proposed comparing candidate VOLUMES instead — banded iff
     * Σ_h C(c_h, 2) element-join rows < the NL square |S|²/2 — and that
     * rule was implemented first and REFUTED by stage isolation
-    * (`Profile kmvscale`, r16 + r17, BASELINE r17): on the dense
+    * (r16 + r17, BASELINE.md r17): on the dense
     * shared-vocabulary bench corpus at |S|=140 it reads 156k ≫ 9.7k
     * and routes to NL, which MEASURES 1.6× slower than banded there
     * (5.13 vs 3.26 s; r16's table already had banded ~2× ahead from
@@ -708,7 +700,7 @@ object AuditOps {
         // expansion AND the per-source sizes both read it (the q95
         // hashed-frame lesson). A dictionary-encoded bit_or bitmap form
         // of this aggregate measured a DEAD HEAT in an interleaved
-        // pass-posture A/B (Profile q96ab: 1.69 vs 1.64 s at sf0.1 — the
+        // pass-posture A/B (r16: 1.69 vs 1.64 s at sf0.1 — the
         // cost is the per-pass job floor, not the aggregate), and needs
         // a source-dictionary collect (an extra corpus pass at scale
         // unless sources come from metadata) — so the simpler form ships.
@@ -785,7 +777,7 @@ object AuditOps {
         // estimator expression. Persist + materialize before the pair
         // stage (r18, the q134 fix): the NL stage reads the sig frame
         // twice (broadcast build + stream side) — 0.62 → 0.49 s at
-        // sf0.1 (Profile kmvpersistab). Same rows either way.
+        // sf0.1 (OPTIMIZATION_r18.md). Same rows either way.
         val sigs = graft.util.Caches.transientPersist(kmvSigs(s, d))
         sigs.count()
         kmvPairsNL(sigs).orderBy("source_a", "source_b")
@@ -2190,7 +2182,7 @@ object AuditOps {
     // standing dedup tier has an ops health report whose
     // candidate_pairs metric predicts its pair join's exact collision
     // volume before anyone runs it (the number the r14→r15 media
-    // re-sketch was judged on; `Profile mediacand` promoted to an
+    // re-sketch was judged on, BASELINE.md r15, promoted to an
     // oracle-checked registry row). Six metrics: fingerprintable docs,
     // band bucket count/max/p99 over the 5×24 banding, candidate_pairs
     // = Σ c·(c−1)/2 over (bk, bkey) buckets, and docs_per_bucket_mean.
@@ -2464,9 +2456,9 @@ object AuditOps {
     // co-occur, never the full cross square. Same signature aggregate,
     // same estimator expression (kmvEstimate — one definition), so the
     // two stages cannot drift; estimate-identity additionally pinned in
-    // AuditSpec and the |S| crossover measured by Profile `kmvscale`
-    // (BASELINE.md r16). The oracle mirrors the banded shape: candidate
-    // pairs from the sig-element self-join, then the q132 estimator.
+    // AuditSpec and the |S| crossover measured in BASELINE.md r16. The
+    // oracle mirrors the banded shape: candidate pairs from the
+    // sig-element self-join, then the q132 estimator.
     Q("q134_source_overlap_fine",
       (s, d) => {
         // STAGE-PINNED to banded (this face is the fine-grained oracle
@@ -2476,7 +2468,7 @@ object AuditOps {
         // self-join + two attaches), and consuming an unmaterialized
         // cache from all four inside one job serializes every scan
         // behind the per-block cache build — measured 2.6 → 1.3 s at
-        // sf0.1 (Profile kmvpersistab; the front door already counts for
+        // sf0.1 (OPTIMIZATION_r18.md; the front door already counts for
         // its dispatch statistics, so this aligns the face with its
         // shape). Same rows, same integers — the oracle is unchanged.
         val sigs = graft.util.Caches.transientPersist(

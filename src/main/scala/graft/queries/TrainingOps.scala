@@ -43,7 +43,7 @@ object TrainingOps {
     * For LIGHT kernels use [[docTextLean]]: measured at sf0.1, the
     * exchange LOSES for one-md5/tokenize-and-count shapes — q70-shape
     * 0.56 → 0.31 s, q74 0.24 → 0.15, q78 0.37 → 0.18, q69 0.29 → 0.13
-    * (Profile lightfan) — because shuffling every text costs more than
+    * (in-JVM A/B) — because shuffling every text costs more than
     * the serial scan task saves. At cluster scale the two are identical
     * (parallel scan ⇒ fanOut is the identity), so the lean form is never
     * a scale regression — the choice only exists at single-row-group
@@ -268,25 +268,16 @@ object TrainingOps {
     * the full corpus text once per bench pass; one cached copy per
     * session serves all three. Narrow frame (doc_id + 32-char hash);
     * key carries the fpIndex seam like every promoted kernel (a
-    * seam-path frame must never serve the session path). Gated on
-    * `spark.graft.kernelCache` — off restores the pre-promotion
-    * per-consumer rebuild. ONE INDEX GENERATION PER SESSION (r18
-    * ADVICE, documented contract): all sharedIndex kernels keyed on
+    * seam-path frame must never serve the session path). ONE INDEX
+    * GENERATION PER SESSION (r18 ADVICE, documented contract): all sharedIndex kernels keyed on
     * `@idx=dir` assume the index under `dir` does not change for the
     * session's lifetime; [[graft.sink.Sink]] write paths call
     * `Caches.invalidateShared(dir)` so a session that appends/compacts
     * mid-session drops the stale entries rather than serving them.
     */
   private[graft] def exactHashesK(s: SparkSession, d: String): DataFrame =
-    // spark.graft.exactKernel=false is the A/B seam (Profile kexactab):
-    // it disables ONLY this promotion (consumers fall back to their
-    // pre-r19 shapes) while the r18 kernels stay on — the arm
-    // difference prices exactly this change, nothing else
-    if (s.conf.getOption("spark.graft.exactKernel").contains("false"))
-      exactHashes(s, d)
-    else
-      graft.util.Caches.sharedIndexIf(s, s"exactHashes:$d" + fpKey(s))(
-        exactHashes(s, d))
+    graft.util.Caches.sharedIndex(s, s"exactHashes:$d" + fpKey(s))(
+      exactHashes(s, d))
 
   /** (doc_id, fp0, fp1) 120-bit media fingerprints — q125's per-payload
     * perceptual sketch, packed as two longs (r15 width; see
@@ -496,11 +487,7 @@ object TrainingOps {
     * q124 reads the dfc table instead and this kernel goes unbuilt).
     */
   private[queries] def dfCounts(s: SparkSession, d: String): DataFrame =
-    // sharedIndexIf, not sharedIndex (r19, an r18 ADVICE item): every
-    // r18-promoted kernel honors the spark.graft.kernelCache opt-out;
-    // this one was accidentally ungated, making "off = pre-r18
-    // behavior" inexact for q109/q124.
-    graft.util.Caches.sharedIndexIf(s, s"dfCounts:$d" + fpKey(s))(
+    graft.util.Caches.sharedIndex(s, s"dfCounts:$d" + fpKey(s))(
       shinglePostings(s, d).groupBy("h1").agg(count(lit(1)).as("c")))
 
   private[queries] def pairIntersections(s: SparkSession, d: String): DataFrame =
@@ -708,12 +695,12 @@ object TrainingOps {
     * tier filters the SHARED verified pair kernel).
     */
   private[queries] def incrementalVerdicts(s: SparkSession, d: String): DataFrame =
-    // r18 kernel promotion (Profile kcacheab): two consumers (q95 and
-    // q123's triage composite) each re-ran the exact-tier hash scan +
-    // best-partner window. Batch-sized narrow frame; key carries the
+    // r18 kernel promotion (BASELINE.md r18 OPTIMIZATION phase): two
+    // consumers (q95 and q123's triage composite) each re-ran the
+    // exact-tier hash scan + best-partner window. Batch-sized narrow frame; key carries the
     // fpIndex seam (the lshPairs rule — a seam-path frame must never
     // serve the session-kernel path).
-    graft.util.Caches.sharedIndexIf(s, s"incrementalVerdicts:$d" + fpKey(s))(
+    graft.util.Caches.sharedIndex(s, s"incrementalVerdicts:$d" + fpKey(s))(
       incrementalVerdictsBuild(s, d))
 
   private def incrementalVerdictsBuild(s: SparkSession, d: String): DataFrame = {
@@ -722,14 +709,8 @@ object TrainingOps {
     // standing side, final batch base) — persist it or the corpus
     // scan + md5 subplan runs once per consumer (the lmScores-inst
     // discipline; r10, an ADVICE catch). r19: ride the promoted
-    // session kernel when the kernel cache is on (q27/q124 share the
-    // same frame); the off-gate keeps the pre-r19 query-local persist
-    // so opting out restores the old memory footprint exactly.
-    val hashed =
-      if (s.conf.getOption("spark.graft.kernelCache").contains("false") ||
-          s.conf.getOption("spark.graft.exactKernel").contains("false"))
-        graft.util.Caches.transientPersist(exactHashes(s, d))
-      else exactHashesK(s, d)
+    // session kernel (q27/q124 share the same frame).
+    val hashed = exactHashesK(s, d)
     val isBatch = col("doc_id") % 10 === 0
     val exact = hashed.filter(isBatch)
       .join(hashed.filter(!isBatch)
@@ -1255,13 +1236,13 @@ object TrainingOps {
     * per row; all ratios are int/int doubles — deterministic.
     */
   private[queries] def qualityFeatures(s: SparkSession, d: String): DataFrame =
-    // r18 kernel promotion (Profile kcacheab, guide §1.2 "don't compute
-    // things twice"): six consumers per session (q36/q82-family/q91/
-    // q101/q113/q123 + releaseCorpus) each re-ran this corpus scan +
+    // r18 kernel promotion (BASELINE.md r18 OPTIMIZATION phase, guide
+    // §1.2 "don't compute things twice"): six consumers per session
+    // (q36/q82-family/q91/q101/q113/q123 + releaseCorpus) each re-ran this corpus scan +
     // word split. The frame is NARROW (id + 5 numbers — fixed-width
     // cache rows, no text), so one materialization serves all six; the
     // split pass runs once per session instead of six times.
-    graft.util.Caches.sharedIndexIf(s, s"qualityFeatures:$d")(
+    graft.util.Caches.sharedIndex(s, s"qualityFeatures:$d")(
       qualityFeaturesOf(documents(s, d)))
 
   /** Frame-based core of [[qualityFeatures]] (r13c) — the sink tier's
@@ -1306,11 +1287,11 @@ object TrainingOps {
     * comments). No presentation sort — callers add their own.
     */
   private[queries] def gopherFeatures(s: SparkSession, d: String): DataFrame =
-    // r18 kernel promotion (Profile kcacheab): two consumers (q100 and
-    // releaseCorpus → q108/q133's chain) each re-ran this corpus
-    // tokenize + line split. Narrow output (id + 7 numbers + 2 flags),
+    // r18 kernel promotion (BASELINE.md r18 OPTIMIZATION phase): two
+    // consumers (q100 and releaseCorpus → q108/q133's chain) each
+    // re-ran this corpus tokenize + line split. Narrow output (id + 7 numbers + 2 flags),
     // one materialization serves both.
-    graft.util.Caches.sharedIndexIf(s, s"gopherFeatures:$d")(
+    graft.util.Caches.sharedIndex(s, s"gopherFeatures:$d")(
       gopherFeaturesBuild(s, d))
 
   private def gopherFeaturesBuild(s: SparkSession, d: String): DataFrame = {
@@ -2101,7 +2082,7 @@ object TrainingOps {
     // ONCE — where the built-in `session_window` aggregation plans the
     // UpdatingSessions machinery (an extra sort + merging-aggregate
     // stage) for its streaming-state generality batch never uses.
-    // Measured (Profile q40ab, sf0.1; harness corrected r11 review —
+    // Measured (BASELINE.md r11, sf0.1; harness corrected r11 review —
     // the baseline arm constructs the built-in inline): 0.376 → 0.254 s
     // quiet / 0.643 → 0.453 s loaded, results bit-identical; the
     // remaining ~0.4 s bench figure is the exchange+window job
@@ -3244,7 +3225,7 @@ object TrainingOps {
             org.apache.spark.sql.types.StringType)))
         // JSON parsing is CPU-heavy enough that fanning the single-row-
         // group scan across cores beats the extra exchange (measured
-        // 0.22 → 0.13 s in Profile fanout; identity on a parallel scan)
+        // 0.22 → 0.13 s at sf0.1; identity on a parallel scan)
         graft.util.Tables.fanOut(
           events(s, d).select(col("event_id"), col("props")))
           // every 3rd row corrupted: drop the opening brace

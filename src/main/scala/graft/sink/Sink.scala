@@ -17,15 +17,6 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, row_number, when}
   */
 object Sink {
 
-  /** Append `batch` to the parquet table at `path`, dropping rows whose
-    * `key` already exists there and intra-batch duplicates. Returns the
-    * number of rows actually appended.
-    *
-    * Intra-batch dedup is DETERMINISTIC: the survivor is the row that
-    * sorts first across all columns — `dropDuplicates` alone keeps a
-    * partition-order-dependent row, which would make reruns over the same
-    * input persist different payloads for a duplicated key.
-    */
   /** Keep-first intra-batch dedup: the survivor is the row that sorts
     * first across all columns — `dropDuplicates` alone keeps a
     * partition-order-dependent row, which would make reruns over the same
@@ -59,6 +50,11 @@ object Sink {
     } finally { persisted.unpersist() }
   }
 
+  /** Append `batch` to the parquet table at `path`, dropping rows whose
+    * `key` already exists there and intra-batch duplicates (keep-first,
+    * see [[dedupKeepFirst]]). Returns the number of rows actually
+    * appended.
+    */
   def upsertAppend(batch: DataFrame, path: String, key: String): Long = {
     val spark = batch.sparkSession
     // Try, not an exists() check: a sink dir that exists but holds no
@@ -224,8 +220,8 @@ object Sink {
     * Single-writer, like the index maintenance ops (see the takedown
     * tier note). Returns the one-row-per-metric pricing frame:
     * `ids_given`, `shards_total`, `shards_rewritten`, `shards_removed`,
-    * `rows_removed`, `rows_rewritten` — `Profile sharddown` measures
-    * the rewrite cost against the affected-shard count (BASELINE r17).
+    * `rows_removed`, `rows_rewritten` — BASELINE.md r17 records the
+    * rewrite cost against the affected-shard count.
     */
   def takedownShards(ids: DataFrame, path: String): DataFrame = {
     val spark = ids.sparkSession
@@ -843,8 +839,8 @@ object Sink {
     * parquet's size estimate, but a mis-estimate demoting this to a
     * sort-merge join would sort the corpus-sized probe side — the
     * cellPairCos hint lesson applied to every tombstone read. Hash
-    * probes, never an OR-predicate single join: the Profile `pairanti`
-    * A/B measured the BroadcastNestedLoop form ~0.1 s faster at
+    * probes, never an OR-predicate single join: an A/B (BASELINE.md
+    * r17) measured the BroadcastNestedLoop form ~0.1 s faster at
     * request-sized tombstone sets but 1.5× SLOWER by 10⁴ accumulated
     * tombstones (O(|t|) comparisons per pair row, unbounded degradation
     * at mass-purge volumes), while chained hash anti-joins stay flat in
@@ -1689,7 +1685,7 @@ object Sink {
     // and pairs are separate write jobs, so without the pin each would
     // re-read deleted/ and re-run the distinct (3× across the three
     // anti-joined columns) — measured at sf10 as the bulk of the vector
-    // fold's tombstone marginal (Profile takedowncost, BASELINE r17)
+    // fold's tombstone marginal (BASELINE.md r17)
     val pin = pinnedTombstones(spark, path, "vec_id", delSnap)
     try {
       def minus(df: DataFrame, cols: Seq[String]): DataFrame =

@@ -30,7 +30,7 @@ import org.apache.spark.storage.StorageLevel
 object Caches {
 
   private val transients =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.lang.ref.WeakReference[DataFrame]]()
+    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
   private val shared =
     new java.util.WeakHashMap[SparkSession,
@@ -80,67 +80,27 @@ object Caches {
     * code: self-unpersisting paths may still do so early (the registry
     * tolerates double-unpersist), but anything left over is reclaimed at
     * the next clear instead of leaking — or worse, plan-matching — into
-    * the next query. The registry holds WEAK references: library callers
-    * that never clear (Verify, the sink surface) keep the pre-registry
-    * behavior where dropping the last reference lets Spark's
-    * ContextCleaner reclaim the cached blocks — the registry must never
-    * be the thing pinning a dead query's cache in memory.
+    * the next query. The registry holds STRONG references: Spark's
+    * CacheManager keeps every persisted plan strongly until it is
+    * unpersisted, so ContextCleaner never reclaims a cached frame whose
+    * last user reference died — a weakly held registration would only
+    * lose the handle [[clearTransient]] needs to drop it.
     */
   def transientPersist(df: DataFrame): DataFrame = {
-    transients.add(new java.lang.ref.WeakReference(df))
+    transients.add(df)
     df.persist()
-    // EXPERIMENT SEAM (r18, default off — behavior is byte-identical
-    // unless a Profile A/B sets it): eagerly materialize the persisted
-    // frame with one count() before any consumer references it. The
-    // q132/q134 fix showed a multi-reference consumer job over an
-    // UNmaterialized cache serializes every InMemoryTableScan behind
-    // the per-block cache build AND plans joins from the child's size
-    // ESTIMATE rather than the materialized size (SortMergeJoin where
-    // a broadcast fits). `Profile eagerab <query>` A/Bs this per query;
-    // wins are then applied EXPLICITLY at the query site (the q132
-    // pattern), never by flipping this conf in shipping paths.
-    if (df.sparkSession.conf.getOption("spark.graft.eagerTransient")
-        .contains("true"))
-      df.count(): Unit
-    df
   }
 
-  /** Drop every registered transient cache still reachable. Cheap when
-    * nothing is registered; safe on already-unpersisted or collected
-    * frames.
+  /** Drop every registered transient cache. Cheap when nothing is
+    * registered; safe on already-unpersisted frames.
     */
   def clearTransient(): Unit = {
-    var ref = transients.poll()
-    while (ref != null) {
-      val df = ref.get()
-      if (df != null) df.unpersist(blocking = false)
-      ref = transients.poll()
+    var df = transients.poll()
+    while (df != null) {
+      df.unpersist(blocking = false)
+      df = transients.poll()
     }
   }
-
-  /** Memoized shared index: builds `build` once per (session, name),
-    * persists it, and RE-RUNS the build if a global cache clear (or
-    * soft-ref eviction) dropped the persisted data — re-running (rather
-    * than re-persisting the stale frame) re-establishes any transient
-    * intermediates the build persists for its own materialization.
-    * Callers get one cached copy per session regardless of how many
-    * queries consume it. The build runs under the per-session lock so
-    * concurrent first callers cannot both pay the corpus pass — `build`
-    * only CONSTRUCTS the plan (fast); materialization happens lazily at
-    * the callers' actions.
-    */
-  /** [[sharedIndex]] gated on `spark.graft.kernelCache` (default ON —
-    * set "false" to opt a memory-constrained session out): the r18
-    * promotion seam for the narrow multi-consumer verdict/feature
-    * frames (qualityFeatures, gopherFeatures, incrementalVerdicts,
-    * noveltyFrame, mediaVerdicts). Off = the pre-r18 behavior, every
-    * consumer re-runs the build; the `Profile kcacheab` interleaved A/B
-    * prices the difference. Values are identical either way — the gate
-    * only chooses whether the SAME frame materializes once or N times.
-    */
-  def sharedIndexIf(s: SparkSession, name: String)(build: => DataFrame): DataFrame =
-    if (s.conf.getOption("spark.graft.kernelCache").contains("false")) build
-    else sharedIndex(s, name)(build)
 
   /** Drop (and unpersist) every shared-index entry — in ANY session —
     * whose key names the given index directory (the `@idx=dir` /
@@ -171,6 +131,17 @@ object Caches {
     }
   }
 
+  /** Memoized shared index: builds `build` once per (session, name),
+    * persists it, and RE-RUNS the build if a global cache clear (or
+    * soft-ref eviction) dropped the persisted data — re-running (rather
+    * than re-persisting the stale frame) re-establishes any transient
+    * intermediates the build persists for its own materialization.
+    * Callers get one cached copy per session regardless of how many
+    * queries consume it. The build runs under the per-session lock so
+    * concurrent first callers cannot both pay the corpus pass — `build`
+    * only CONSTRUCTS the plan (fast); materialization happens lazily at
+    * the callers' actions.
+    */
   def sharedIndex(s: SparkSession, name: String)(build: => DataFrame): DataFrame = {
     val perSession = shared.synchronized {
       var m = shared.get(s)

@@ -123,7 +123,7 @@ class AuditSpec extends AnyFunSuite {
 
   test("kmvPairs front door: choice rule anchored to the measured regimes, dispatch never changes the answer") {
     import graft.queries.AuditOps
-    // the measured anchors the rule must reproduce (kmvscale, BASELINE
+    // the measured anchors the rule must reproduce (stage isolation, BASELINE
     // r16 + r17): q132's tens-of-sources contract → NL (the only
     // measured NL win, |S|=20); banded from |S|≈100 at EVERY measured
     // tier, dense (sf0.1 shared vocabulary, |S|=140: banded 3.26 s vs

@@ -157,6 +157,59 @@ class CliSpec extends AnyFunSuite {
     assert(Cli.run(spark, List("manifestcheck", dir)) == 1)
   }
 
+  test("contract verbs: pre-process, index-functions, export-source, validate") {
+    import java.nio.file.{Files, Path}
+    def write(p: Path, content: String): Unit = {
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, content)
+    }
+    val root = Files.createTempDirectory("graft-cli-contracts")
+    // a fiesta metadata folder: single-source ERC-20-style contract
+    write(root.resolve("Token_0/metadata.json"),
+      """{"ContractName": "Token", "CompilerVersion": "0.8.19", """ +
+        """"Runs": 200, "OptimizationUsed": true, "BytecodeHash": "0x01"}""")
+    write(root.resolve("Token_0/main.sol"),
+      """pragma solidity ^0.8.0;
+        |contract Token {
+        |    mapping(address => uint256) public balanceOf;
+        |    function transfer(address to, uint256 amount) public returns (bool) {
+        |        balanceOf[msg.sender] -= amount;
+        |        balanceOf[to] += amount;
+        |        return true;
+        |    }
+        |}
+        |""".stripMargin)
+    // an Etherscan dump whose name starts with its folder's name
+    val vault = "pragma solidity ^0.8.0;\\ncontract Vault {\\n" +
+      "    function deposit(uint256 amount) external {}\\n}\\n"
+    write(root.resolve("0xab12/0xab12_Vault.json"),
+      s"""{"SourceCode": "$vault", "ABI": "[]", "ContractName": "Vault", """ +
+        """"CompilerVersion": "0.8.19", "OptimizationUsed": "1", """ +
+        """"Runs": "200", "BytecodeHash": "0x02"}""")
+    val db = Files.createTempDirectory("graft-cli-db").toString
+    def counts() = (spark.read.parquet(s"$db/contract").count(),
+      spark.read.parquet(s"$db/function").count())
+
+    assert(Cli.run(spark, List("pre-process", root.toString, db)) == 0)
+    assert(Cli.run(spark, List("index-functions", db)) == 0)
+    val contracts = spark.read.parquet(s"$db/contract")
+    assert(contracts.count() == 2)
+    assert(spark.read.parquet(s"$db/function")
+      .filter(col("selector") === "0xa9059cbb").count() == 1)
+    // re-running both verbs over the same tree appends nothing
+    val first = counts()
+    assert(Cli.run(spark, List("pre-process", root.toString, db)) == 0)
+    assert(Cli.run(spark, List("index-functions", db)) == 0)
+    assert(counts() == first)
+
+    val id = contracts.filter(col("name") === "Token").select("id").head.getString(0)
+    val out = Files.createTempDirectory("graft-cli-export")
+    assert(Cli.run(spark, List("export-source", db, id, out.toString)) == 0)
+    assert(Files.readString(out.resolve("main.sol")).contains("function transfer"))
+    assert(Cli.run(spark, List("export-source", db, "no-such-id", out.toString)) == 1)
+    assert(Cli.run(spark, List("validate", db)) == 0)
+  }
+
   test("unknown command exits 2") {
     assert(Cli.run(spark, List("frobnicate")) == 2)
   }

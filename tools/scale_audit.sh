@@ -84,66 +84,10 @@ run q118_incremental_semantic /tmp/graft-sf10r 100 64g
 # lifted; q106 rides the same panel
 run q98_ann_recall,q106_hard_negatives /tmp/graft-sf1r 10 48g
 run q98_ann_recall,q106_hard_negatives /tmp/graft-sf10r 100 64g
-# r13: the X97 fingerprint-index seam — standalone audits riding the
-# persisted index instead of rebuilding the session kernel. Build the
-# index once per scale dir (one-time cost, reported), then time the
-# standalone consumers with and without the seam.
-seam() { # $1=sfdir $2=idxdir $3=heap, then query names...
-  local sfdir=$1 idx=$2 heap=$3; shift 3
-  echo "=== fpindex $sfdir -> $idx $(date +%T)"
-  # a bare -d check would treat a crashed half-written build as done and
-  # silently void every index-riding arm; require the last table's
-  # commit marker, rebuilding from scratch otherwise
-  if [ ! -f "$idx/shingles/batch=base/_SUCCESS" ]; then
-    rm -rf "$idx"
-    java -Xmx$heap -cp "$CP" graft.Profile "$sfdir" fpindex "$idx" 2>&1 | grep fpindex
-  fi
-  for q in "$@"; do
-    echo "--- $q standalone, session kernel"
-    java -Xmx$heap -cp "$CP" graft.Profile "$sfdir" time "$q" 3 2>&1 | grep time
-    echo "--- $q standalone, index-riding"
-    SPARK_GRAFT_FP_INDEX="$idx" java -Xmx$heap -cp "$CP" graft.Profile "$sfdir" time "$q" 3 2>&1 | grep time
-  done
-}
-seam /tmp/graft-sf10r /tmp/graft-fp10 64g \
-  q110_neardup_split_leakage q111_contamination_pairs q95_incremental_dedup
-# r14: the X103 PAIR seam — the semantic tier's X97 treatment. Build the
-# vector index (vectors + retained pairs) once, then time the semantic
-# audits riding its pairs table instead of re-quantizing/re-enumerating.
-# q116 gets a third arm with BOTH seams (its lexical half rides the
-# fingerprint index — the production audit posture).
-vseam() { # $1=sfdir $2=vecidx $3=fpidx $4=heap, then query names...
-  local sfdir=$1 vidx=$2 fidx=$3 heap=$4; shift 4
-  echo "=== vecindex $sfdir -> $vidx $(date +%T)"
-  if [ ! -f "$vidx/pairs/batch=base/_SUCCESS" ]; then
-    rm -rf "$vidx"
-    java -Xmx$heap -cp "$CP" graft.Profile "$sfdir" vecindex "$vidx" 2>&1 | grep vecindex
-  fi
-  for q in "$@"; do
-    echo "--- $q standalone, session kernel"
-    java -Xmx$heap -cp "$CP" graft.Profile "$sfdir" time "$q" 3 2>&1 | grep time
-    echo "--- $q standalone, vec-index-riding"
-    SPARK_GRAFT_VEC_INDEX="$vidx" java -Xmx$heap -cp "$CP" \
-      graft.Profile "$sfdir" time "$q" 3 2>&1 | grep time
-    echo "--- $q standalone, both indexes"
-    SPARK_GRAFT_VEC_INDEX="$vidx" SPARK_GRAFT_FP_INDEX="$fidx" java -Xmx$heap \
-      -cp "$CP" graft.Profile "$sfdir" time "$q" 3 2>&1 | grep time
-  done
-}
-vseam /tmp/graft-sf10r /tmp/graft-vec10 /tmp/graft-fp10 64g \
-  q115_semantic_contamination q116_dedup_tier_agreement q118_incremental_semantic
-# r14: the INTERLEAVED seam instrument (separate-JVM seam timings swung
-# 3x with writeback residue in the r14 session — seamab subjects both
-# arms to identical window drift; these are the authoritative seam
-# numbers, the per-arm `time` calls above are context only)
-java -Xmx64g -cp "$CP" graft.Profile /tmp/graft-sf10r seamab \
-  q115_semantic_contamination /tmp/graft-vec10 - 3 2>&1 | grep seamab
-java -Xmx64g -cp "$CP" graft.Profile /tmp/graft-sf10r seamab \
-  q116_dedup_tier_agreement /tmp/graft-vec10 /tmp/graft-fp10 3 2>&1 | grep seamab
-java -Xmx64g -cp "$CP" graft.Profile /tmp/graft-sf10r seamab \
-  q118_incremental_semantic /tmp/graft-vec10 - 3 2>&1 | grep seamab
-java -Xmx64g -cp "$CP" graft.Profile /tmp/graft-sf10r seamab \
-  q124_index_stats - /tmp/graft-fp10 3 2>&1 | grep seamab
-java -Xmx64g -cp "$CP" graft.Profile /tmp/graft-sf10r seamab \
-  q125_media_neardup - /tmp/graft-fp10 3 2>&1 | grep seamab
+# The index-seam arms (standalone audits riding a persisted fingerprint
+# or vector index instead of rebuilding the session kernel) are recorded
+# in BASELINE.md r13/r14 and are not part of this battery: ScaleCheck
+# times every query at BOTH scales, and a seam names one corpus's index.
+# Build the indexes with `graft.Cli fingerprint <sfDir> <idxDir>` and
+# `graft.Cli vecindex <sfDir> <idxDir>`.
 echo "=== scale_audit done $(date +%T) load $(cut -d' ' -f1 /proc/loadavg)"
