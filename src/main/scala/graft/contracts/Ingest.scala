@@ -22,10 +22,9 @@ import org.apache.spark.sql.types._
   *  - Etherscan single-source fallback uses the fixed name `main.sol`
   *    (`plain_contract.rs:276`).
   *
-  * Spark shape: one `binaryFile` scan (persisted across the two source
-  * branches), per-folder group, pure column expressions. At 100 TB the
-  * scan parallelizes per file; the only shuffles are the per-folder
-  * groupBy and the id-dedup in the sink.
+  * Spark shape: a `binaryFile` scan per source branch, per-folder group,
+  * pure column expressions. At 100 TB the scan parallelizes per file; the
+  * only shuffles are the per-folder groupBy and the id-dedup in the sink.
   */
 object Ingest {
 
@@ -172,15 +171,21 @@ object Ingest {
         metaStruct(col("m"), "m").as("metadata"), col("source_type"), col("files"))
   }
 
-  /** Full contract table: both sources from ONE persisted scan, PK-deduped
-    * on content id with deterministic precedence (metadata-folder row wins
-    * over an etherscan duplicate — S9 keep-first, `db.rs:172-196`).
+  /** Full contract table: both sources, PK-deduped on content id with
+    * deterministic precedence (metadata-folder row wins over an etherscan
+    * duplicate — S9 keep-first, `db.rs:172-196`), then the smaller name,
+    * then the remaining payload columns, so the survivor never depends on
+    * shuffle order. Each source branch reads the tree's files itself: a
+    * persisted scan would outlive the call, and a later call over the
+    * same root would match it in the cache and miss files added since.
     */
   def contracts(s: SparkSession, root: String): DataFrame = {
-    val files = graft.util.Caches.transientPersist(scanTree(s, root))
+    val files = scanTree(s, root)
     val both = metadataContracts(files).withColumn("__prio", lit(0))
       .unionByName(etherscanContracts(files, root).withColumn("__prio", lit(1)))
-    val w = Window.partitionBy("id").orderBy(col("__prio"), col("name"))
+    val w = Window.partitionBy("id").orderBy(
+      (Seq("__prio", "name") ++ both.columns.filterNot(Set("id", "__prio", "name")))
+        .map(col): _*)
     both.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__prio", "__rn")

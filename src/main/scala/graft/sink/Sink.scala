@@ -2,18 +2,26 @@ package graft.sink
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.{coalesce, col, lit, row_number, when}
+import org.apache.spark.sql.types.StructType
 
 /** S9/S10 sink semantics: the reference's `INSERT … ON CONFLICT DO
   * NOTHING` (`db.rs:172-196`, `:206-234`) as a keep-first dedup-append
   * parquet writer. Spark has no write-time PK, so uniqueness is enforced
-  * as: dedup the batch on the key, anti-join against the existing sink,
-  * append the remainder.
+  * as: anti-join the batch against the existing sink's keys, keep-first
+  * dedup what survives on the key, append the remainder.
   *
-  * Scale notes: the anti-join shuffles only the KEY column of the
-  * existing sink (projection pushdown) against the new batch; with the
-  * sink laid out via `partitionBy`/`bucketBy` on the key the probe reads
-  * prune further. Append is atomic per task file — a failed job leaves no
-  * partial duplicates because reruns re-anti-join.
+  * Scale notes: the work of one upsert follows the fresh delta, not the
+  * standing table. The existing sink is read as its KEY column alone,
+  * with that column's schema pinned (no schema-inference job), and only
+  * keys reach the anti-join's shuffle; the all-column keep-first window,
+  * the only step that moves and sorts payload, runs after it on the rows
+  * whose keys are new. Each non-empty upsert appends files sized to
+  * `spark.sql.files.maxPartitionBytes` (the split size the read path
+  * uses), so a batch below that size adds one file per table rather than
+  * one per shuffle partition; the table still grows by a file per
+  * non-empty upsert, as nothing compacts it. Append is atomic per task
+  * file — a failed job leaves no partial duplicates because reruns
+  * re-anti-join.
   */
 object Sink {
 
@@ -30,19 +38,24 @@ object Sink {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Anti-join away keys already in the sink, then count + append via
-    * `write`. The count-then-write pair reads the shuffled output once
-    * through the cache; an accumulator would save the pass but complicate
-    * a batch-oriented sink for nothing.
+  /** Anti-join `batch` against the keys already in the sink, keep-first
+    * dedup the survivors (see [[dedupKeepFirst]]), then count + append
+    * via `write`. Both steps decide per key, so running the anti-join
+    * first keeps the same rows as deduping first, while the payload
+    * shuffle and sort see only fresh rows. The count-then-write pair
+    * reads the shuffled output once through the cache; an accumulator
+    * would save the pass but complicate a batch-oriented sink for
+    * nothing. `write` receives the persisted frame, already loaded, and
+    * is not called when no row is fresh.
     */
-  private def appendFresh(deduped: DataFrame,
+  private def appendFresh(batch: DataFrame,
       existingKeys: Option[DataFrame], key: String,
       write: DataFrame => Unit): Long = {
-    val fresh = existingKeys match {
-      case Some(existing) => deduped.join(existing, Seq(key), "left_anti")
-      case None => deduped
+    val unseen = existingKeys match {
+      case Some(existing) => batch.join(existing, Seq(key), "left_anti")
+      case None => batch
     }
-    val persisted = fresh.persist()
+    val persisted = dedupKeepFirst(unseen, key).persist()
     try {
       val n = persisted.count()
       if (n > 0) write(persisted)
@@ -50,20 +63,38 @@ object Sink {
     } finally { persisted.unpersist() }
   }
 
+  /** `loaded` (persisted and materialized) coalesced to one partition per
+    * `spark.sql.files.maxPartitionBytes` of its cached size, so the
+    * files written from it are about the size the read path splits at.
+    * A narrow coalesce over the cache: the jobs upstream of the persist
+    * keep their parallelism.
+    */
+  private def rightSized(loaded: DataFrame): DataFrame = {
+    // the plan reads the cache, whose stats report the measured size
+    // once every partition is loaded
+    val bytes = loaded.queryExecution.optimizedPlan.stats.sizeInBytes
+    val split = loaded.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    loaded.coalesce(((bytes + split - 1) / split).max(1).min(Int.MaxValue).toInt)
+  }
+
   /** Append `batch` to the parquet table at `path`, dropping rows whose
     * `key` already exists there and intra-batch duplicates (keep-first,
-    * see [[dedupKeepFirst]]). Returns the number of rows actually
-    * appended.
+    * see [[appendFresh]]). The fresh rows land as right-sized files (see
+    * [[rightSized]]): one file for a batch below
+    * `spark.sql.files.maxPartitionBytes`, none when nothing is fresh.
+    * Returns the number of rows actually appended.
     */
   def upsertAppend(batch: DataFrame, path: String, key: String): Long = {
     val spark = batch.sparkSession
-    // Try, not an exists() check: a sink dir that exists but holds no
-    // parquet (failed first write, pre-created dir) must count as fresh —
+    // the key column alone, its type pinned from the batch, so no
+    // schema-inference job runs. Try, not an exists() check: a missing
+    // sink dir must count as fresh, and a dir that exists but holds no
+    // parquet (failed first write, pre-created dir) reads as no keys —
     // an unreadable existing sink would otherwise wedge every rerun
-    val existingKeys =
-      scala.util.Try(spark.read.parquet(path).select(col(key))).toOption
-    appendFresh(dedupKeepFirst(batch, key), existingKeys, key,
-      _.write.mode(SaveMode.Append).parquet(path))
+    val existingKeys = scala.util.Try(
+      spark.read.schema(StructType(Seq(batch.schema(key)))).parquet(path)).toOption
+    appendFresh(batch, existingKeys, key,
+      rightSized(_).write.mode(SaveMode.Append).parquet(path))
   }
 
   /** S9/S10 over JDBC — the reference's stated sink shape is "DataFrame
@@ -85,7 +116,7 @@ object Sink {
         // JDBC relations are re-queried per action; snapshot the keys so
         // the anti-join cannot race the append below
         .persist()).toOption.filter(df => scala.util.Try(df.count()).isSuccess)
-    try appendFresh(dedupKeepFirst(batch, key), existingKeys, key,
+    try appendFresh(batch, existingKeys, key,
       _.write.mode(SaveMode.Append).jdbc(url, table, props))
     finally existingKeys.foreach(_.unpersist())
   }

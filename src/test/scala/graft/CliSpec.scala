@@ -189,6 +189,9 @@ class CliSpec extends AnyFunSuite {
     val db = Files.createTempDirectory("graft-cli-db").toString
     def counts() = (spark.read.parquet(s"$db/contract").count(),
       spark.read.parquet(s"$db/function").count())
+    // by id: the context holds persisted RDDs weakly, so a GC may drop
+    // unrelated leftovers from other tests while the verbs run
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
 
     assert(Cli.run(spark, List("pre-process", root.toString, db)) == 0)
     assert(Cli.run(spark, List("index-functions", db)) == 0)
@@ -201,6 +204,26 @@ class CliSpec extends AnyFunSuite {
     assert(Cli.run(spark, List("pre-process", root.toString, db)) == 0)
     assert(Cli.run(spark, List("index-functions", db)) == 0)
     assert(counts() == first)
+    // a folder added to the same tree is picked up by the next run in
+    // this session (no cached listing of the earlier scans serves it)
+    write(root.resolve("Pool_2/metadata.json"),
+      """{"ContractName": "Pool", "CompilerVersion": "0.8.19", """ +
+        """"Runs": 200, "OptimizationUsed": true, "BytecodeHash": "0x03"}""")
+    write(root.resolve("Pool_2/main.sol"),
+      """pragma solidity ^0.8.0;
+        |contract Pool {
+        |    function swap(uint256 amountIn) external returns (uint256) {
+        |        return amountIn;
+        |    }
+        |}
+        |""".stripMargin)
+    assert(Cli.run(spark, List("pre-process", root.toString, db)) == 0)
+    assert(Cli.run(spark, List("index-functions", db)) == 0)
+    assert(counts()._1 == 3)
+    assert(spark.read.parquet(s"$db/function")
+      .filter(col("function_name") === "swap").count() == 1)
+    // the verbs leave nothing persisted behind them
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty)
 
     val id = contracts.filter(col("name") === "Token").select("id").head.getString(0)
     val out = Files.createTempDirectory("graft-cli-export")

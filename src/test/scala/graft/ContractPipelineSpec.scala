@@ -320,4 +320,25 @@ class ContractPipelineSpec extends AnyFunSuite {
     val counter = written.find(_.getFileName.toString == "Counter.sol").get
     assert(java.nio.file.Files.readString(counter).contains("function decrement()"))
   }
+
+  test("S9: same-content, same-name folders keep the row whose metadata sorts first") {
+    import java.nio.file.Files
+    val source = "pragma solidity ^0.8.0;\ncontract Twin {\n" +
+      "    function ping() external {}\n}\n"
+    // both folder orders: the survivor must not depend on which is read first
+    for (versions <- Seq(Seq("0.8.20", "0.8.19"), Seq("0.8.19", "0.8.20"))) {
+      val tree = Files.createTempDirectory("graft-ingest-tie")
+      for ((dir, version) <- Seq("A_0", "B_1").zip(versions)) {
+        Files.createDirectories(tree.resolve(dir))
+        Files.writeString(tree.resolve(s"$dir/main.sol"), source)
+        Files.writeString(tree.resolve(s"$dir/metadata.json"),
+          s"""{"ContractName": "Twin", "CompilerVersion": "$version", """ +
+            """"Runs": 200, "OptimizationUsed": true, "BytecodeHash": "0x01"}""")
+      }
+      val rows = Ingest.contracts(spark, tree.toString)
+        .select(col("name"), col("metadata.compiler_version")).collect()
+      assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq
+        == Seq(("Twin", "0.8.19")), versions)
+    }
+  }
 }

@@ -17,16 +17,35 @@ class SinkSpec extends AnyFunSuite {
   test("upsertAppend is keep-first and idempotent") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-sink").toString + "/t"
+    def dataFiles() = new java.io.File(dir).list().count(_.endsWith(".parquet"))
+    def table(at: String = dir) = spark.read.parquet(at).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
     val b1 = Seq((1L, "a"), (2L, "b"), (2L, "b-dup")).toDF("id", "v")
     assert(Sink.upsertAppend(b1, dir, "id") == 2) // intra-batch dedup
+    assert(dataFiles() == 1) // a small batch lands as one file
     assert(Sink.upsertAppend(b1, dir, "id") == 0) // rerun: conflict-ignore
+    assert(dataFiles() == 1) // a no-op upsert writes nothing
     val b2 = Seq((2L, "x"), (3L, "c")).toDF("id", "v")
     assert(Sink.upsertAppend(b2, dir, "id") == 1) // only the fresh key
-    val out = spark.read.parquet(dir).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(dataFiles() == 2)
+    val out = table()
     assert(out.keySet == Set(1L, 2L, 3L))
     assert(out(3L) == "c")
     assert(out(2L) != "x") // existing row 2 not replaced
+    assert(out(2L) == "b") // keep-first: the row sorting first survived
+
+    // intra-batch duplicates of an existing key and of a fresh key: the
+    // existing row stays, the fresh key keeps the row sorting first
+    val b3 = Seq((3L, "z"), (3L, "a"), (4L, "q"), (4L, "d"), (4L, "m"))
+      .toDF("id", "v")
+    assert(Sink.upsertAppend(b3, dir, "id") == 1)
+    assert(table() == out + (4L -> "d"))
+    assert(dataFiles() == 3)
+
+    // a pre-created sink directory holding no parquet counts as fresh
+    val empty = Files.createTempDirectory("graft-sink-empty").toString
+    assert(Sink.upsertAppend(b1, empty, "id") == 2)
+    assert(table(empty) == Map(1L -> "a", 2L -> "b"))
   }
 
   test("writeShards: per-shard directories whose read-back order IS the layout order") {
