@@ -22,9 +22,14 @@ import org.apache.spark.sql.types._
   *  - Etherscan single-source fallback uses the fixed name `main.sol`
   *    (`plain_contract.rs:276`).
   *
-  * Spark shape: a `binaryFile` scan per source branch, per-folder group,
-  * pure column expressions. At 100 TB the scan parallelizes per file; the
-  * only shuffles are the per-folder groupBy and the id-dedup in the sink.
+  * Spark shape: `binaryFile` scans, per-folder group, pure column
+  * expressions. Nothing is cached, so one [[contracts]] call lists the
+  * tree four times and reads every file's content three times: the
+  * metadata.json parse, the per-folder file group and the Etherscan
+  * candidates each scan the whole tree with `content` selected (the
+  * metadata-folder exclusion selects only paths). At 100 TB each scan
+  * parallelizes per file; the only shuffles are the per-folder groupBy,
+  * the id keep-first and the id-dedup in the sink.
   */
 object Ingest {
 

@@ -15,13 +15,15 @@ import org.apache.spark.sql.types.StructType
   * with that column's schema pinned (no schema-inference job), and only
   * keys reach the anti-join's shuffle; the all-column keep-first window,
   * the only step that moves and sorts payload, runs after it on the rows
-  * whose keys are new. Each non-empty upsert appends files sized to
+  * whose keys are new. Each non-empty upsert appends one file per
   * `spark.sql.files.maxPartitionBytes` (the split size the read path
-  * uses), so a batch below that size adds one file per table rather than
-  * one per shuffle partition; the table still grows by a file per
-  * non-empty upsert, as nothing compacts it. Append is atomic per task
-  * file — a failed job leaves no partial duplicates because reruns
-  * re-anti-join.
+  * uses) of the fresh rows' cached, in-memory size, so a batch below
+  * that size adds one file per table rather than one per shuffle
+  * partition. The files on disk come out smaller than that setting,
+  * as parquet encodes and compresses the rows. The table still grows by
+  * a file per non-empty upsert, as nothing compacts it. Append is atomic
+  * per task file — a failed job leaves no partial duplicates because
+  * reruns re-anti-join.
   */
 object Sink {
 
@@ -64,10 +66,11 @@ object Sink {
   }
 
   /** `loaded` (persisted and materialized) coalesced to one partition per
-    * `spark.sql.files.maxPartitionBytes` of its cached size, so the
-    * files written from it are about the size the read path splits at.
-    * A narrow coalesce over the cache: the jobs upstream of the persist
-    * keep their parallelism.
+    * `spark.sql.files.maxPartitionBytes` of its cached, in-memory size.
+    * That bounds the files written from it by the size the read path
+    * splits at; on disk they are smaller, after parquet encoding and
+    * compression. A narrow coalesce over the cache: the jobs upstream of
+    * the persist keep their parallelism.
     */
   private def rightSized(loaded: DataFrame): DataFrame = {
     // the plan reads the cache, whose stats report the measured size
@@ -80,7 +83,7 @@ object Sink {
   /** Append `batch` to the parquet table at `path`, dropping rows whose
     * `key` already exists there and intra-batch duplicates (keep-first,
     * see [[appendFresh]]). The fresh rows land as right-sized files (see
-    * [[rightSized]]): one file for a batch below
+    * [[rightSized]]): one file for a batch whose cached size is below
     * `spark.sql.files.maxPartitionBytes`, none when nothing is fresh.
     * Returns the number of rows actually appended.
     */

@@ -4,7 +4,7 @@
 Usage (from anywhere inside the repository):
 
   python3 tools/ab.py --workload contract_ingest --pairs 10 [--base HEAD]
-                      [--seed 2001] [--seconds 20]
+                      [--seed 2001]
 
 Extracts the committed files of `--base` into a temporary directory (the
 benchmark compares committed trees; an archive, unlike a worktree, leaves
@@ -12,6 +12,7 @@ nothing registered in the repository if the tool is interrupted), then
 runs `perfbench/run.py` for `--pairs` alternating pairs: pair i runs both
 sides on seed `--seed + i`, base first on even pairs and the checkout
 first on odd ones, so a drift in host load falls on both sides alike.
+Every run times BENCHMARK.json's `run_seconds` window.
 
 For every end-to-end metric of BENCHMARK.json it prints each side's median
 and quartiles, and in how many pairs the checkout was better; then each
@@ -54,15 +55,12 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--base", default="HEAD")
     ap.add_argument("--seed", type=int, default=2001)
-    ap.add_argument("--seconds", type=int, default=None,
-                    help="timed window; BENCHMARK.json's run_seconds by default")
     a = ap.parse_args()
 
     repo = subprocess.run(["git", "rev-parse", "--show-toplevel"], check=True,
                           capture_output=True, text=True).stdout.strip()
     with open(os.path.join(repo, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = a.seconds or bench["run_seconds"]
     rev = subprocess.run(["git", "rev-parse", "--short", a.base], cwd=repo, check=True,
                          capture_output=True, text=True).stdout.strip()
 
@@ -82,7 +80,7 @@ def main():
             if i % 2:
                 order.reverse()
             for side, root in order:
-                res, det = run_bench(root, a.workload, seed, seconds) or (None, None)
+                res, det = run_bench(root, a.workload, seed, bench["run_seconds"]) or (None, None)
                 runs.append((i, side, seed, res, det))
                 state = "did not finish" if res is None else (
                     "correct" if res["correct"] else "NOT correct")
