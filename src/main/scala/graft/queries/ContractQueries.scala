@@ -13,6 +13,9 @@ import graft.contracts.{Derive, Ingest}
   */
 object ContractQueries {
 
+  /** The reference repo's contract fixtures (FIXTURES.md §A), read-only. */
+  private[graft] val referenceRoot = "/root/reference/contracts"
+
   /** Composed fixture root: the reference's demo metadata-folder contract
     * plus its Bueno721Drop etherscan dump laid out the way the reference's
     * scan filter expects — an address-named folder holding the
@@ -25,7 +28,10 @@ object ContractQueries {
     * staged into a fresh temp directory, then atomically renamed into
     * place — a concurrent first build or a crashed previous one can never
     * leave a partial tree visible (the loser of the rename race reuses
-    * the winner's complete tree).
+    * the winner's complete tree). Both sources are required up front: a
+    * host without [[referenceRoot]] gets an IllegalArgumentException
+    * naming the missing path and no /tmp side effects, and a copy that
+    * fails mid-stage removes its stage.
     */
   private[graft] lazy val fixtureRoot: String = {
     import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -36,8 +42,14 @@ object ContractQueries {
             .forEach(p => Files.deleteIfExists(p))
         }
       }
-    val src = Paths.get("/root/reference/contracts")
+    val src = Paths.get(referenceRoot)
     val addr = "0x9ca84eacf0d0775782ab5b34d01187b37f1ceea4"
+    val srcDemo = src.resolve("demo")
+    val srcEth = src.resolve(s"${addr}_Bueno721Drop.json")
+    require(Files.isDirectory(srcDemo),
+      s"reference contract fixture directory missing: $srcDemo")
+    require(Files.isRegularFile(srcEth),
+      s"reference contract fixture file missing: $srcEth")
     val base = Paths.get("/tmp/graft-fixture-tree")
     val ethFile = base.resolve(addr).resolve(s"${addr}_Bueno721Drop.json")
     if (!Files.exists(ethFile)) {
@@ -47,17 +59,20 @@ object ContractQueries {
       // handler below mistake it for a winner's complete tree
       deleteTree(base)
       val stage = Files.createTempDirectory(base.getParent, "graft-fixture-stage")
-      Files.createDirectories(stage.resolve(addr))
-      Files.createDirectories(stage.resolve("demo"))
-      scala.util.Using.resource(Files.list(src.resolve("demo"))) { listing =>
-        listing.forEach { p =>
-          Files.copy(p, stage.resolve("demo").resolve(p.getFileName.toString),
-            StandardCopyOption.REPLACE_EXISTING)
+      try {
+        Files.createDirectories(stage.resolve(addr))
+        Files.createDirectories(stage.resolve("demo"))
+        scala.util.Using.resource(Files.list(srcDemo)) { listing =>
+          listing.forEach { p =>
+            Files.copy(p, stage.resolve("demo").resolve(p.getFileName.toString),
+              StandardCopyOption.REPLACE_EXISTING)
+          }
         }
+        Files.copy(srcEth, stage.resolve(addr).resolve(srcEth.getFileName.toString),
+          StandardCopyOption.REPLACE_EXISTING)
+      } catch {
+        case e: Throwable => deleteTree(stage); throw e
       }
-      Files.copy(src.resolve(s"${addr}_Bueno721Drop.json"),
-        stage.resolve(addr).resolve(s"${addr}_Bueno721Drop.json"),
-        StandardCopyOption.REPLACE_EXISTING)
       try Files.move(stage, base, StandardCopyOption.ATOMIC_MOVE)
       catch {
         // another process won the race: keep theirs, discard the stage

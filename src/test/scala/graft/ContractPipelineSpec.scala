@@ -9,16 +9,18 @@ import graft.functions.Keccak
 /** Contract pipeline against the reference's own fixtures
   * (/root/reference/contracts, read-only) — ports the reference's golden
   * tests (`plain_contract.rs:542-588`) to the compiler-free scanner.
+  * The cases that read those fixtures cancel on a host without them.
   */
 class ContractPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val root = "/root/reference/contracts"
+  private val root = TestSpark.referenceContracts
 
   // the reference's golden string (`plain_contract.rs:560-562`)
   private val goldenDecrement =
     "function decrement() public override {\n        count = count.subtract(1);\n    }"
 
   test("S1/S3: demo folder classifies as multi_sol with 4 .sol files") {
+    TestSpark.assumeReferenceContracts()
     val c = Ingest.metadataContracts(spark, root).collect()
     assert(c.length == 1)
     val row = c.head
@@ -33,6 +35,7 @@ class ContractPipelineSpec extends AnyFunSuite {
   }
 
   test("A2: multi-file content id is the sorted-multiset hash") {
+    TestSpark.assumeReferenceContracts()
     import scala.jdk.CollectionConverters._
     def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -44,6 +47,7 @@ class ContractPipelineSpec extends AnyFunSuite {
   }
 
   test("S2 prefix rule: a root-level non-prefixed .json is SKIPPED by the scan") {
+    TestSpark.assumeReferenceContracts()
     // the fixture keeps Bueno721Drop.json at the scan root; its name does
     // not start with the root dir's basename ("contracts"), so the
     // reference's filter (`main.rs:136-142`, parent.file_name() even at
@@ -52,6 +56,7 @@ class ContractPipelineSpec extends AnyFunSuite {
   }
 
   test("S2 prefix rule: the conforming addr-folder layout IS ingested by the scan") {
+    TestSpark.assumeReferenceContracts()
     val c = Ingest.etherscanContracts(spark,
       graft.queries.ContractQueries.fixtureRoot).collect()
     assert(c.length == 1)
@@ -59,6 +64,7 @@ class ContractPipelineSpec extends AnyFunSuite {
   }
 
   test("S2/S4/F12/F7: Bueno721Drop etherscan dump parses as standard-json") {
+    TestSpark.assumeReferenceContracts()
     // the per-file entry point — the reference's own test path for this
     // fixture (`from_etherscan_json`, plain_contract.rs:580-581)
     val c = Ingest.etherscanJson(spark,
@@ -80,6 +86,7 @@ class ContractPipelineSpec extends AnyFunSuite {
   }
 
   test("SourceFiles.expand: standard-json container yields its sources map") {
+    TestSpark.assumeReferenceContracts()
     val c = Ingest.etherscanJson(spark,
       s"$root/0x9ca84eacf0d0775782ab5b34d01187b37f1ceea4_Bueno721Drop.json")
       .collect().head
@@ -96,6 +103,7 @@ class ContractPipelineSpec extends AnyFunSuite {
   }
 
   test("U3 golden: Counter.decrement body slice matches the reference test") {
+    TestSpark.assumeReferenceContracts()
     val counter = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/demo/Counter.sol"))
     val fns = Solidity.extractFunctions(counter)
@@ -111,12 +119,14 @@ class ContractPipelineSpec extends AnyFunSuite {
   }
 
   test("U3: visibility gate — Math's internal functions are not ABI") {
+    TestSpark.assumeReferenceContracts()
     val math = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/demo/Math.sol"))
     assert(Solidity.extractFunctions(math).isEmpty)
   }
 
   test("U3: interface declarations slice through the semicolon") {
+    TestSpark.assumeReferenceContracts()
     val icounter = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/demo/ICounter.sol"))
     val fns = Solidity.extractFunctions(icounter)
@@ -277,6 +287,7 @@ class ContractPipelineSpec extends AnyFunSuite {
   }
 
   test("U2/F4: function table derivation end-to-end") {
+    TestSpark.assumeReferenceContracts()
     val fns = Derive.functionTable(spark, graft.queries.ContractQueries.fixtureRoot)
     val rows = fns.collect()
     assert(rows.length > 20) // demo (4) + Bueno721Drop OpenZeppelin tree
@@ -312,6 +323,7 @@ class ContractPipelineSpec extends AnyFunSuite {
     assert(Export.defaultExtension("Counter", Set("Counter", "Counter.sol")) == "Counter")
     assert(Export.defaultExtension("Counter.sol", Set()) == "Counter.sol")
 
+    TestSpark.assumeReferenceContracts()
     val id = Ingest.metadataContracts(spark, root).collect().head.getAs[String]("id")
     val out = java.nio.file.Files.createTempDirectory("graft-export").toString
     val written = Export.exportSource(spark, root, id, out)
@@ -319,6 +331,23 @@ class ContractPipelineSpec extends AnyFunSuite {
     assert(written.forall(java.nio.file.Files.exists(_)))
     val counter = written.find(_.getFileName.toString == "Counter.sol").get
     assert(java.nio.file.Files.readString(counter).contains("function decrement()"))
+  }
+
+  test("fixtureRoot without the reference fixtures names the missing path and leaves no stage") {
+    assume(!TestSpark.referenceContractsPresent,
+      s"reference contract fixtures present at $root — no missing-source path to check")
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Paths.get("/tmp")
+    def stages(): Set[String] =
+      scala.util.Using.resource(java.nio.file.Files.list(tmp)) { l =>
+        l.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("graft-fixture-stage")).toSet
+      }
+    val before = stages()
+    val e = intercept[IllegalArgumentException](
+      graft.queries.ContractQueries.fixtureRoot)
+    assert(e.getMessage.contains(root))
+    assert(stages() -- before == Set.empty[String])
   }
 
   test("S9: same-content, same-name folders keep the row whose metadata sorts first") {

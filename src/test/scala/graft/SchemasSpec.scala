@@ -10,9 +10,10 @@ import graft.model.Schemas
   */
 class SchemasSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val root = "/root/reference/contracts"
+  private val root = TestSpark.referenceContracts
 
   test("pipeline output passes all constraint checks") {
+    TestSpark.assumeReferenceContracts()
     val contracts = Ingest.contracts(spark, root)
     val functions = Derive.functions(contracts).toDF()
     val v = Schemas.validate(contracts, functions)
@@ -20,6 +21,7 @@ class SchemasSpec extends AnyFunSuite {
   }
 
   test("ingest output conforms to the declared contract schema shape") {
+    TestSpark.assumeReferenceContracts()
     val got = Ingest.contracts(spark, root).schema
     assert(got.fieldNames.toSeq == Schemas.contractSchema.fieldNames.toSeq)
     assert(got("files").dataType.simpleString ==

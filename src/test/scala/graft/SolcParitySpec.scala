@@ -9,7 +9,8 @@ import graft.contracts.{ScannerBackend, SolcBackend}
   * the ABI-driven [[SolcBackend]] — the derivation the reference always
   * runs (`plain_contract.rs:327-377`, `499-508`). This container is
   * zero-egress and has no solc, so the spec is SKIPPED (canceled, not
-  * failed) here and becomes a real gate on any solc-bearing host.
+  * failed) here and becomes a real gate on any solc-bearing host that
+  * also carries the reference contract fixtures.
   *
   * Direction of the check: solc's ABI is the superset (it synthesizes
   * public-state-variable getters and repeats inherited functions under
@@ -21,8 +22,9 @@ class SolcParitySpec extends AnyFunSuite {
 
   test("U1: scanner signatures/selectors agree with solc's ABI on the fixtures") {
     assume(SolcBackend.available(), "no solc binary on this host — parity gate skipped")
+    TestSpark.assumeReferenceContracts()
     val solc = new SolcBackend()
-    val dir = java.nio.file.Paths.get("/root/reference/contracts/demo")
+    val dir = java.nio.file.Paths.get(TestSpark.referenceContracts, "demo")
     import scala.jdk.CollectionConverters._
     val sols = java.nio.file.Files.list(dir).iterator().asScala
       .filter(_.toString.endsWith(".sol")).toSeq.sortBy(_.toString)

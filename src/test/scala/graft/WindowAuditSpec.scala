@@ -47,7 +47,7 @@ class WindowAuditSpec extends AnyFunSuite {
     "q94_epoch_plan") // |sources| caps rows
 
   test("every unpartitioned window in the registry has a written bound") {
-    val offenders = SparkEntry.registry.flatMap { q =>
+    val offenders = TestSpark.registryRunnableHere.flatMap { q =>
       val plan = q.fn(spark, TestSpark.sfDir).queryExecution.optimizedPlan
       val unpart = plan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
