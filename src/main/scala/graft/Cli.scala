@@ -35,20 +35,33 @@ object Cli {
     if (code != 0) sys.exit(code)
   }
 
+  /** Finish any fold an upsert left half done in either table, so a
+    * reader sees every row once (see [[Sink.settle]]). */
+  private def settle(spark: SparkSession, dbDir: String): Unit =
+    Seq("contract", "function").foreach(t => Sink.settle(spark, s"$dbDir/$t"))
+
+  /** `path (N files, K KB)`: the table's data files after a call. */
+  private def table(spark: SparkSession, path: String): String = {
+    val (files, bytes) = Sink.tableFiles(spark, path)
+    s"$path ($files files, ${(bytes + 1023) / 1024} KB)"
+  }
+
   def run(spark: SparkSession, args: List[String]): Int = args match {
     case "pre-process" :: root :: dbDir :: Nil =>
       val n = Sink.upsertAppend(Ingest.contracts(spark, root), s"$dbDir/contract", "id")
-      println(s"[graft] pre-process: $n new contract rows -> $dbDir/contract")
+      println(s"[graft] pre-process: $n new contract rows -> ${table(spark, s"$dbDir/contract")}")
       0
 
     case "index-functions" :: dbDir :: Nil =>
+      settle(spark, dbDir)
       val contracts = spark.read.parquet(s"$dbDir/contract")
       val n = Sink.upsertAppend(Derive.functions(contracts).toDF(),
         s"$dbDir/function", "id")
-      println(s"[graft] index-functions: $n new function rows -> $dbDir/function")
+      println(s"[graft] index-functions: $n new function rows -> ${table(spark, s"$dbDir/function")}")
       0
 
     case "export-source" :: dbDir :: id :: out :: Nil =>
+      settle(spark, dbDir)
       // point lookup straight off the contract table (S6), then S11 export
       val written = Export.exportFrom(spark.read.parquet(s"$dbDir/contract"), id, out)
       if (written.isEmpty) {
@@ -61,6 +74,7 @@ object Cli {
       }
 
     case "validate" :: dbDir :: Nil =>
+      settle(spark, dbDir)
       // S12/P2/J1 constraint checks over the built tables
       val v = graft.model.Schemas.validate(
         spark.read.parquet(s"$dbDir/contract"),

@@ -1,6 +1,7 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, row_number, when}
 import org.apache.spark.sql.types.StructType
 
@@ -15,15 +16,20 @@ import org.apache.spark.sql.types.StructType
   * with that column's schema pinned (no schema-inference job), and only
   * keys reach the anti-join's shuffle; the all-column keep-first window,
   * the only step that moves and sorts payload, runs after it on the rows
-  * whose keys are new. Each non-empty upsert appends one file per
+  * whose keys are new. Each non-empty upsert appends one zstd file per
   * `spark.sql.files.maxPartitionBytes` (the split size the read path
   * uses) of the fresh rows' cached, in-memory size, so a batch below
   * that size adds one file per table rather than one per shuffle
   * partition. The files on disk come out smaller than that setting,
-  * as parquet encodes and compresses the rows. The table still grows by
-  * a file per non-empty upsert, as nothing compacts it. Append is atomic
-  * per task file — a failed job leaves no partial duplicates because
-  * reruns re-anti-join.
+  * as parquet encodes and compresses the rows. A size-tiered fold then
+  * keeps the table compact (see [[foldSet]]): a run of small files in
+  * ascending size, each no larger than twice the ones taken before it,
+  * is rewritten as one, so a row is rewritten a logarithmic number of
+  * times and the table holds a few small files rather than one per
+  * upsert. The fold swaps in through a journal (see [[settle]]): at
+  * every crash point the table reads each row once after the next
+  * upsert or `settle`. Append is atomic per task file — a failed job
+  * leaves no partial duplicates because reruns re-anti-join.
   */
 object Sink {
 
@@ -82,13 +88,16 @@ object Sink {
 
   /** Append `batch` to the parquet table at `path`, dropping rows whose
     * `key` already exists there and intra-batch duplicates (keep-first,
-    * see [[appendFresh]]). The fresh rows land as right-sized files (see
-    * [[rightSized]]): one file for a batch whose cached size is below
-    * `spark.sql.files.maxPartitionBytes`, none when nothing is fresh.
-    * Returns the number of rows actually appended.
+    * see [[appendFresh]]). The fresh rows land as right-sized zstd files
+    * (see [[rightSized]]): one file for a batch whose cached size is below
+    * `spark.sql.files.maxPartitionBytes`, none when nothing is fresh. A
+    * non-empty append is followed by a [[fold]] of the table's small
+    * files; every call first [[settle]]s a fold an earlier call left
+    * half done. Returns the number of rows actually appended.
     */
   def upsertAppend(batch: DataFrame, path: String, key: String): Long = {
     val spark = batch.sparkSession
+    settle(spark, path)
     // the key column alone, its type pinned from the batch, so no
     // schema-inference job runs. Try, not an exists() check: a missing
     // sink dir must count as fresh, and a dir that exists but holds no
@@ -96,8 +105,121 @@ object Sink {
     // an unreadable existing sink would otherwise wedge every rerun
     val existingKeys = scala.util.Try(
       spark.read.schema(StructType(Seq(batch.schema(key)))).parquet(path)).toOption
-    appendFresh(batch, existingKeys, key,
-      rightSized(_).write.mode(SaveMode.Append).parquet(path))
+    val n = appendFresh(batch, existingKeys, key, rightSized(_).write
+      .mode(SaveMode.Append).option("compression", "zstd").parquet(path))
+    if (n > 0) fold(spark, path, batch.schema)
+    n
+  }
+
+  /** Which of a table's files one fold rewrites, as indices into `sizes`
+    * (bytes on disk). Among the files below `split`, in ascending size
+    * (ties in the given order), a run is taken from some file onwards
+    * while the next is no larger than twice the ones already taken
+    * combined and the total stays within `split`. The first run, from
+    * the smallest start, that takes at least two files is the fold; none
+    * gives an empty set. The factor 2 lets batches of varying size fold
+    * (a "no larger than the last" rule never fires once sizes vary), and
+    * the merged file is about 1.5 times the largest file taken or more,
+    * so a row is rewritten O(log(table / batch)) times. Trying every start, not only the
+    * smallest file, keeps one small file from blocking the rest: when no
+    * run is left, the sizes more than double from each file to the next.
+    */
+  def foldSet(sizes: Seq[Long], split: Long): Seq[Int] = {
+    val small = sizes.indices.filter(sizes(_) < split).sortBy(sizes(_))
+    def runFrom(start: Int): Seq[Int] = {
+      var total = 0L
+      small.drop(start).takeWhile { i =>
+        val take = (total == 0 || sizes(i) <= 2 * total) && total + sizes(i) <= split
+        if (take) total += sizes(i)
+        take
+      }
+    }
+    small.indices.iterator.map(runFrom).find(_.size >= 2).getOrElse(Seq.empty)
+  }
+
+  private val FoldDir = "_fold"
+  private val Journal = "_FOLDED"
+
+  /** A table's visible data files: what Spark's listing reads, i.e. not
+    * `_`- or `.`-prefixed (so `_fold/` and `_SUCCESS` are not data). */
+  private def dataFiles(fs: FileSystem, dir: Path) =
+    fs.listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+
+  /** The data files of the table at `path` and their bytes on disk, by
+    * listing it; (0, 0) when it does not exist. */
+  def tableFiles(spark: SparkSession, path: String): (Int, Long) = {
+    val table = new Path(path)
+    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(table)) (0, 0L)
+    else {
+      val files = dataFiles(fs, table)
+      (files.size, files.map(_.getLen).sum)
+    }
+  }
+
+  /** Rewrite the table's [[foldSet]] as one zstd file, read with
+    * `schema` pinned so no inference job runs, and swap it in staged:
+    * write it under `_fold/`, which Spark's listing skips, journal the
+    * folded names in `_fold/_FOLDED` (temp name, then rename), then
+    * [[rollForward]]. No row is deleted before its copy is visible.
+    */
+  private def fold(spark: SparkSession, path: String, schema: StructType): Unit = {
+    val table = new Path(path)
+    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = dataFiles(fs, table)
+    val taken = foldSet(files.map(_.getLen),
+      spark.sessionState.conf.filesMaxPartitionBytes).map(files(_).getPath)
+    if (taken.nonEmpty) {
+      val stage = new Path(table, FoldDir)
+      spark.read.schema(schema).parquet(taken.map(_.toString): _*).coalesce(1)
+        .write.mode(SaveMode.Overwrite).option("compression", "zstd")
+        .parquet(stage.toString)
+      val tmp = new Path(stage, s"$Journal.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(taken.map(_.getName + "\n").mkString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      if (!fs.rename(tmp, new Path(stage, Journal)))
+        sys.error(s"fold journal rename failed: $tmp")
+      rollForward(fs, table)
+    }
+  }
+
+  /** Finish or drop a fold that an earlier call left half done, so the
+    * table at `path` reads every row exactly once. With a journal the
+    * fold rolls forward; without one the staged file is not yet owed to
+    * anyone and `_fold/` is deleted. [[upsertAppend]] runs it first, and
+    * readers that must not see a half-done fold (`Cli validate`,
+    * `export-source`) run it before they read, the way a database
+    * replays its log when it is opened.
+    */
+  def settle(spark: SparkSession, path: String): Unit = {
+    val table = new Path(path)
+    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
+    val stage = new Path(table, FoldDir)
+    if (fs.exists(new Path(stage, Journal))) rollForward(fs, table)
+    else if (fs.exists(stage)) fs.delete(stage, true)
+  }
+
+  /** The journaled steps of a fold, each safe to repeat: rename the
+    * merged file from `_fold/` into the table, delete the folded files
+    * the journal names (those already gone are skipped), delete `_fold/`.
+    */
+  private def rollForward(fs: FileSystem, table: Path): Unit = {
+    val stage = new Path(table, FoldDir)
+    val in = fs.open(new Path(stage, Journal))
+    val folded = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.nonEmpty).toList finally in.close()
+    for (st <- dataFiles(fs, stage)) {
+      val to = new Path(table, st.getPath.getName)
+      if (!fs.rename(st.getPath, to))
+        sys.error(s"fold rename failed: ${st.getPath} -> $to")
+    }
+    folded.foreach(n => fs.delete(new Path(table, n), false))
+    fs.delete(stage, true)
   }
 
   /** S9/S10 over JDBC — the reference's stated sink shape is "DataFrame

@@ -159,6 +159,7 @@ class CliSpec extends AnyFunSuite {
 
   test("contract verbs: pre-process, index-functions, export-source, validate") {
     import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
     def write(p: Path, content: String): Unit = {
       Files.createDirectories(p.getParent)
       Files.writeString(p, content)
@@ -217,20 +218,48 @@ class CliSpec extends AnyFunSuite {
         |    }
         |}
         |""".stripMargin)
-    assert(Cli.run(spark, List("pre-process", root.toString, db)) == 0)
-    assert(Cli.run(spark, List("index-functions", db)) == 0)
+    // each write verb reports the table's data files and bytes after it
+    def reported(verb: String, args: List[String], table: String): Unit = {
+      val out = new java.io.ByteArrayOutputStream
+      assert(Console.withOut(out)(Cli.run(spark, verb :: args)) == 0)
+      val files = new java.io.File(s"$db/$table").listFiles()
+        .filter(_.getName.startsWith("part-"))
+      val kb = (files.map(_.length).sum + 1023) / 1024
+      assert(out.toString.contains(
+        s"[graft] $verb: 1 new $table rows -> $db/$table (${files.length} files, $kb KB)"),
+        out.toString)
+    }
+    reported("pre-process", List(root.toString, db), "contract")
+    reported("index-functions", List(db), "function")
     assert(counts()._1 == 3)
     assert(spark.read.parquet(s"$db/function")
       .filter(col("function_name") === "swap").count() == 1)
     // the verbs leave nothing persisted behind them
     assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore).isEmpty)
 
-    val id = contracts.filter(col("name") === "Token").select("id").head.getString(0)
+    // read again: the frame read before the third run lists files that
+    // the run's fold has since replaced
+    val id = spark.read.parquet(s"$db/contract")
+      .filter(col("name") === "Token").select("id").head.getString(0)
     val out = Files.createTempDirectory("graft-cli-export")
     assert(Cli.run(spark, List("export-source", db, id, out.toString)) == 0)
     assert(Files.readString(out.resolve("main.sol")).contains("function transfer"))
     assert(Cli.run(spark, List("export-source", db, "no-such-id", out.toString)) == 1)
     assert(Cli.run(spark, List("validate", db)) == 0)
+
+    // a fold stopped after its merged copy moved in, before the folded
+    // file was deleted: the table reads its rows twice until validate
+    // settles it
+    val table = Path.of(db, "contract")
+    val folded = Files.list(table).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).toSeq
+    Files.createDirectories(table.resolve("_fold"))
+    Files.writeString(table.resolve("_fold/_FOLDED"), folded.map(_ + "\n").mkString)
+    for (f <- folded) Files.copy(table.resolve(f), table.resolve("part-merged-" + f))
+    assert(counts()._1 == 6)
+    assert(Cli.run(spark, List("validate", db)) == 0)
+    assert(counts()._1 == 3)
+    assert(!Files.exists(table.resolve("_fold")))
   }
 
   test("unknown command exits 2") {

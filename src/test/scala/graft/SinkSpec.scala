@@ -27,7 +27,10 @@ class SinkSpec extends AnyFunSuite {
     assert(dataFiles() == 1) // a no-op upsert writes nothing
     val b2 = Seq((2L, "x"), (3L, "c")).toDF("id", "v")
     assert(Sink.upsertAppend(b2, dir, "id") == 1) // only the fresh key
-    assert(dataFiles() == 2)
+    // the appended file and the first, both tiny and within twice each
+    // other's size, fold into one, and the fold's stage is gone
+    assert(dataFiles() == 1)
+    assert(!new java.io.File(dir, "_fold").exists)
     val out = table()
     assert(out.keySet == Set(1L, 2L, 3L))
     assert(out(3L) == "c")
@@ -40,12 +43,130 @@ class SinkSpec extends AnyFunSuite {
       .toDF("id", "v")
     assert(Sink.upsertAppend(b3, dir, "id") == 1)
     assert(table() == out + (4L -> "d"))
-    assert(dataFiles() == 3)
+    assert(dataFiles() == 1)
 
     // a pre-created sink directory holding no parquet counts as fresh
     val empty = Files.createTempDirectory("graft-sink-empty").toString
     assert(Sink.upsertAppend(b1, empty, "id") == 2)
     assert(table(empty) == Map(1L -> "a", 2L -> "b"))
+  }
+
+  test("foldSet: equal pairs fold, a file over twice the rest stops it, the split caps it") {
+    val b = 1000L
+    val big = 1L << 20
+    assert(Sink.foldSet(Seq(b, b), big) == Seq(0, 1))
+    assert(Sink.foldSet(Seq(b, 3 * b), big).isEmpty)
+    // ascending, ties in the given order: b + b, then 3b <= 2 * 2b
+    assert(Sink.foldSet(Seq(3 * b, b, b), big) == Seq(1, 2, 0))
+    assert(Sink.foldSet(Seq(b, b, 5 * b), big) == Seq(0, 1)) // 5b > 2 * 2b
+    // a small file that takes no neighbour does not block a run above it
+    assert(Sink.foldSet(Seq(3 * b, b, 3 * b), big) == Seq(0, 2))
+    assert(Sink.foldSet(Seq(b, 3 * b, 7 * b), big).isEmpty)
+    assert(Sink.foldSet(Seq(b), big).isEmpty)
+    assert(Sink.foldSet(Seq.empty, big).isEmpty)
+    // files at or above the split never fold; the total stays within it
+    assert(Sink.foldSet(Seq(b, b), b).isEmpty)
+    assert(Sink.foldSet(Seq(b, b, b), 2 * b) == Seq(0, 1))
+    assert(Sink.foldSet(Seq(600L, 600L), b).isEmpty)
+  }
+
+  /** A contract table of two files and a function table, then a fold of
+    * the two contract files stopped at `crash`: 1 = merged file staged,
+    * no journal; 2 = journaled, not yet moved in; 3 = moved in, one
+    * folded file deleted and the other not. `settle` must leave every
+    * row once, `validate` at 0, and a rerun of the rows must append 0. */
+  private def foldCrash(crash: Int): Unit = {
+    import java.io.File
+    import java.nio.file.Paths
+    import org.apache.spark.sql.{Row, SaveMode}
+    import graft.model.Schemas
+    import spark.implicits._
+    val db = Files.createTempDirectory("graft-fold-crash").toString
+    val table = s"$db/contract"
+    def contracts(ids: Range) = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        ids.map(i => Row(f"c$i%02d", s"C$i", null, "json", null)), 1),
+      Schemas.contractSchema)
+    contracts(0 until 5).write.parquet(table)
+    contracts(5 until 8).write.mode(SaveMode.Append).parquet(table)
+    (0 until 8).map(i => (s"f$i", f"c$i%02d", s"C$i", "f", "main.sol",
+      "f()", "0x26121ff0", "function f() {}"))
+      .toDF(Schemas.functionSchema.fieldNames.toSeq: _*)
+      .write.parquet(s"$db/function")
+    def violations() = Schemas.validate(spark.read.parquet(table),
+      spark.read.parquet(s"$db/function"))
+    val folded = new File(table).list().filter(_.startsWith("part-")).sorted
+    assert(folded.length == 2)
+
+    spark.read.parquet(folded.map(f => s"$table/$f").toSeq: _*).coalesce(1)
+      .write.parquet(s"$table/_fold")
+    if (crash >= 2) Files.writeString(Paths.get(table, "_fold", "_FOLDED"),
+      folded.map(_ + "\n").mkString)
+    if (crash >= 3) {
+      val merged = new File(s"$table/_fold").list().find(_.startsWith("part-")).get
+      Files.move(Paths.get(table, "_fold", merged), Paths.get(table, merged))
+      Files.delete(Paths.get(table, folded(0)))
+      assert(violations()("contract_pk") > 0) // the unfolded file's rows twice
+    }
+
+    Sink.settle(spark, table)
+    assert(!new File(table, "_fold").exists)
+    assert(spark.read.parquet(table).select("id").as[String].collect().sorted.toSeq ==
+      (0 until 8).map(i => f"c$i%02d"))
+    assert(violations().values.forall(_ == 0))
+    assert(Sink.upsertAppend(contracts(0 until 8), table, "id") == 0)
+  }
+
+  test("settle after a fold staged but not journaled drops the stage") {
+    foldCrash(1)
+  }
+
+  test("settle after a journaled fold not yet moved in rolls it forward") {
+    foldCrash(2)
+  }
+
+  test("settle after a fold moved in with a folded file left rolls it forward") {
+    foldCrash(3)
+  }
+
+  test("twelve upserts keep the keep-first rows and lookups, folding small files") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-sink-fold").toString + "/t"
+    val split = spark.sessionState.conf.filesMaxPartitionBytes
+    def sizes() = new java.io.File(dir).listFiles().toSeq
+      .filter(_.getName.startsWith("part-")).map(_.length)
+    val rng = new scala.util.Random(12)
+    var expected = Map.empty[String, (String, String)] // id -> (selector, v)
+    for (_ <- 0 until 12) {
+      // batches of varying size and payload, overlapping the table and
+      // themselves
+      val rows = Seq.fill(5 + rng.nextInt(60)) {
+        val k = rng.nextInt(300)
+        (f"k$k%03d", f"0x${k % 13}%08x", rng.alphanumeric.take(10 + rng.nextInt(80)).mkString)
+      }
+      val fresh = rows.filterNot(r => expected.contains(r._1)).groupBy(_._1)
+        .map { case (k, rs) => k -> rs.map(r => (r._2, r._3)).min }
+      assert(Sink.upsertAppend(rows.toDF("id", "selector", "v"), dir, "id") == fresh.size)
+      expected ++= fresh
+      // nothing left to fold: each file more than twice the next smaller
+      assert(Sink.foldSet(sizes(), split).isEmpty)
+      val ladder = sizes().sorted
+      assert(ladder.zip(ladder.drop(1)).forall { case (a, b) => b > 2 * a }, ladder)
+    }
+    assert(sizes().size <= 3, sizes())
+    assert(new java.io.File(dir).list().filter(_.startsWith("part-"))
+      .forall(_.endsWith(".zstd.parquet")))
+    val t = spark.read.parquet(dir)
+    assert(t.as[(String, String, String)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap == expected)
+    assert(t.count() == expected.size)
+    for (k <- expected.keys.toSeq.sorted.take(5))
+      assert(t.filter(col("id") === k).select("v").as[String].collect().toSeq ==
+        Seq(expected(k)._2))
+    for (s <- Seq(0, 5, 12).map(i => f"0x$i%08x"))
+      assert(t.filter(col("selector") === s).select("id").as[String].collect().toSet ==
+        expected.collect { case (k, (`s`, _)) => k }.toSet)
   }
 
   test("writeShards: per-shard directories whose read-back order IS the layout order") {

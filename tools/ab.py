@@ -4,7 +4,7 @@
 Usage (from anywhere inside the repository):
 
   python3 tools/ab.py --workload contract_ingest --pairs 10 [--base HEAD]
-                      [--seed 2001]
+                      [--seed 2001] [--trace]
 
 Extracts the committed files of `--base` into a temporary directory (the
 benchmark compares committed trees; an archive, unlike a worktree, leaves
@@ -15,7 +15,10 @@ first on odd ones, so a drift in host load falls on both sides alike.
 Every run times BENCHMARK.json's `run_seconds` window.
 
 For every end-to-end metric of BENCHMARK.json it prints each side's median
-and quartiles, and in how many pairs the checkout was better; then each
+and quartiles, and in how many pairs the checkout was better. With
+`--trace` every run is traced (`--trace 1`) and the same table covers
+BENCHMARK.json's per-layer metrics instead; a traced run reports no
+end-to-end metrics, as tracing slows it. Then it prints each
 run's correctness, failed ops and host CPU steal (jiffies). Exits 1 if any
 run was not `correct` or did not finish. The temporary tree, with its
 build, is removed at the end.
@@ -30,10 +33,11 @@ import sys
 import tempfile
 
 
-def run_bench(root, workload, seed, seconds):
+def run_bench(root, workload, seed, seconds, trace):
     """One perfbench run in `root`: (result line, detail line) or None."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(seconds),
+                        "--trace", str(int(trace))],
                        cwd=root, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if p.returncode != 0 or len(lines) < 2:
@@ -55,6 +59,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--base", default="HEAD")
     ap.add_argument("--seed", type=int, default=2001)
+    ap.add_argument("--trace", action="store_true",
+                    help="trace every run and compare the per-layer metrics")
     a = ap.parse_args()
 
     repo = subprocess.run(["git", "rev-parse", "--show-toplevel"], check=True,
@@ -80,7 +86,8 @@ def main():
             if i % 2:
                 order.reverse()
             for side, root in order:
-                res, det = run_bench(root, a.workload, seed, bench["run_seconds"]) or (None, None)
+                res, det = (run_bench(root, a.workload, seed, bench["run_seconds"], a.trace)
+                            or (None, None))
                 runs.append((i, side, seed, res, det))
                 state = "did not finish" if res is None else (
                     "correct" if res["correct"] else "NOT correct")
@@ -93,9 +100,10 @@ def main():
         return {i: r["metrics"][name]["value"] for i, s, _, r, _ in runs
                 if s == side and r is not None and name in r["metrics"]}
 
-    print(f"\n{a.workload}: base {rev} vs checkout, {a.pairs} alternating pairs")
-    print(f"{'metric':22} {'base median [q1, q3]':>32} {'change median [q1, q3]':>32}  wins")
-    for m in bench["end_to_end"]:
+    traced = " traced" if a.trace else ""
+    print(f"\n{a.workload}: base {rev} vs checkout, {a.pairs} alternating{traced} pairs")
+    print(f"{'metric':36} {'base median [q1, q3]':>32} {'change median [q1, q3]':>32}  wins")
+    for m in bench["per_layer" if a.trace else "end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         b, c = values("base", name), values("change", name)
         if not b or not c:
@@ -106,7 +114,7 @@ def main():
         def fmt(v):
             q1, med, q3 = quartiles(sorted(v.values()))
             return f"{med:.4g} [{q1:.4g}, {q3:.4g}]"
-        print(f"{name:22} {fmt(b):>32} {fmt(c):>32}  {wins}/{len(paired)}")
+        print(f"{name:36} {fmt(b):>32} {fmt(c):>32}  {wins}/{len(paired)}")
 
     print("\nruns:")
     bad = 0
