@@ -2,126 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Driver-run benchmark: one JSON line with per-query and total seconds.
+/** Registry timer: one JSON line with per-query and total seconds.
   *
   * Methodology: each query is fully materialized through the `noop` sink —
   * unlike `count()`, this cannot let Catalyst prune computed columns, so
   * the timing covers the whole operator (hash columns, UDFs, window
   * payloads). A warmup pass first runs every benched query once (JIT,
-  * codegen compilation, parquet footer cache), then the timed pass
+  * codegen compilation, parquet footer cache), then one timed pass
   * measures steady-state engine throughput — the same cache posture the
-  * DuckDB baseline enjoys from the OS page cache.
+  * DuckDB baseline (`tools/pair.py`) enjoys from the OS page cache.
   */
 object Bench {
 
-  /** Committed quiet-window CONTROL reference at sf0.1 (r16 — the
-    * judge's self-certification ask): loadavg gates only say how busy
-    * the box CLAIMS to be; these say how fast it actually IS, measured
-    * inside the run. q01 prices one cold count scan (IO + job floor);
-    * q29 prices the full shared shingle-kernel build + band join (the
-    * compute- and shuffle-sensitive control). Both run in the control
-    * posture (caches cleared, storage re-warmed — a fresh pass's
-    * accounting) FIRST and LAST, and the artifact carries all four
-    * numbers plus a THREE-BAND verdict (r18 — BENCH_r17 certified
-    * 'quiet' with a first control at 2.1× reference and broad
-    * sub-second inflation the serialized closing pairs disproved
-    * row-by-row; a middle band stops warm windows reading as per-query
-    * regressions): 'quiet' when every control at both ends stays within
-    * reference × [[ControlQuietFactor]]; 'warm' between that and
-    * × [[ControlLoadedFactor]] — the total/ratio remain comparable and
-    * the artifact is still promotable, but PER-QUERY rows are marked
-    * not window-comparable (read movement there against a serialized
-    * pair, not this artifact); 'loaded' above ×3. Reference values:
-    * min across quiet-window control runs at the pair.py posture
-    * (BASELINE.md r16 — q01 0.07–0.11 s, q29 steady-state 0.80–1.68 s;
-    * the committed values sit at the observed quiet ceiling). The
-    * factor 3 sits above the ±20% JVM noise band and the q29 JIT tail,
-    * and well below the 10–30× co-tenant burst swings this box
-    * documents (BASELINE r15: identical runs 2.5–97 s); the ×2 quiet
-    * band admits the noise band over the committed ceiling and nothing
-    * else. sf0.1-only (the driver's bench posture) — other sf dirs
-    * read 'unknown'.
-    *
-    * PORTABILITY (r17 — the committed values are THIS box's, and a
-    * driver-box change would otherwise flip every future artifact to
-    * 'loaded'): `SPARK_GRAFT_CTRL_REF="<q01_s>,<q29_s>"` overrides the
-    * committed reference (the sf gate then defers to the operator —
-    * the override asserts "these are quiet values for THIS sfDir/box"),
-    * and `SPARK_GRAFT_CTRL_MEASURE=N` is the one-command re-measure:
-    * Bench warms the two controls, runs the control loop N times in
-    * the exact artifact posture, prints the per-control MIN (the
-    * quiet-window figure to commit here / export as the override) as
-    * one JSON line, and exits without benching. Run it in a certified
-    * quiet window (loadavg + a repeat agreeing within the noise band).
-    */
-  private val DefaultControlRef =
-    Seq("q01_count_scan" -> 0.12, "q29_lsh_neardup" -> 1.30)
-  private val ControlQuietFactor = 2.0
-  private val ControlLoadedFactor = 3.0
-
-  /** The three-band verdict, extracted PURE so BenchArtifactSpec can pin
-    * the band boundaries without running a bench: `control_failed`
-    * dominates (a crashed control must never read as any certification),
-    * `unknown` where no reference applies, then quiet ≤ ×[[
-    * ControlQuietFactor]] / warm ≤ ×[[ControlLoadedFactor]] / loaded
-    * above — every control at BOTH ends must clear a band to earn it.
-    */
-  private[graft] def windowVerdictOf(ctrlFirst: Seq[Double],
-      ctrlLast: Seq[Double], ref: Seq[Double], refOk: Boolean): String = {
-    def within(f: Double) = Seq(ctrlFirst, ctrlLast).forall(c =>
-      c.zip(ref).forall { case (v, r) => v <= r * f })
-    if ((ctrlFirst ++ ctrlLast).exists(_ < 0)) "control_failed"
-    else if (!refOk) "unknown"
-    else if (within(ControlQuietFactor)) "quiet"
-    else if (within(ControlLoadedFactor)) "warm"
-    else "loaded"
-  }
-
-  private def sysLoad(): Double = java.lang.management.ManagementFactory
-    .getOperatingSystemMXBean.getSystemLoadAverage
-
-  /** 5-minute loadavg (Linux /proc; -1 where unavailable). The r14 gate
-    * passed at 1-min 1.91 while the 5-min average was 7.52 — a DRAINING
-    * box whose pair read 1.023 vs 0.767 in a truly quiet window — so the
-    * quiet-window gate requires BOTH averages under the threshold.
-    */
-  private def sysLoad5(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.mkString.trim.split("\\s+")(1).toDouble finally src.close()
-    } catch { case _: Exception => -1.0 }
-
   def main(args: Array[String]): Unit = {
-    // QUIET-WINDOW GATE (r13 verdict: BENCH_r13.json was the round's one
-    // loaded window — launched at loadavg 13.95 while the identical build
-    // paired 0.789 at loadavg 0.30 hours earlier). Wait, bounded, for the
-    // box to quiesce BEFORE any timed work, and record the start loadavg
-    // in the artifact so every pair is attributable to the engine rather
-    // than the window. SPARK_GRAFT_LOADAVG_GATE sets the threshold
-    // (default 2.0; 0 disables); SPARK_GRAFT_LOADAVG_WAIT_S caps the wait
-    // (default 900 s). On timeout the bench RUNS anyway — a loud note
-    // plus the recorded loadavg beat a missing artifact.
-    val gateThreshold = scala.util.Try(
-      sys.env("SPARK_GRAFT_LOADAVG_GATE").trim.toDouble).getOrElse(2.0)
-    val gateWaitS = scala.util.Try(
-      sys.env("SPARK_GRAFT_LOADAVG_WAIT_S").trim.toInt).getOrElse(900).max(0)
-    // the gate requires BOTH the 1-min and 5-min averages quiet (r14: a
-    // draining box passed at 1-min 1.91 / 5-min 7.52 and benched 1.023
-    // vs the same code's 0.767 in a quiet window)
-    def loadMax(): Double = math.max(sysLoad(), sysLoad5())
-    var waitedS = 0
-    while (gateThreshold > 0 && loadMax() > gateThreshold &&
-        waitedS < gateWaitS) {
-      System.err.println(f"[bench] loadavg 1m ${sysLoad()}%.2f / " +
-        f"5m ${sysLoad5()}%.2f > $gateThreshold%.1f — waiting for a " +
-        s"quiet window (${waitedS}s/${gateWaitS}s)")
-      Thread.sleep(15000); waitedS += 15
-    }
-    val loadStart = sysLoad()
-    if (gateThreshold > 0 && loadMax() > gateThreshold)
-      System.err.println(f"[bench] WARNING: quiet-window gate timed out at " +
-        f"loadavg 1m $loadStart%.2f / 5m ${sysLoad5()}%.2f — running " +
-        "anyway; treat this artifact's window as loaded")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // a non-numeric SPARK_GRAFT_CPUS (e.g. "*" for local[*]) must not
@@ -129,235 +22,76 @@ object Bench {
     // matching what local[*] actually schedules
     val coreFloor = cpus.toIntOption
       .getOrElse(Runtime.getRuntime.availableProcessors)
-    val fixedShuffle = sys.env.get("SPARK_GRAFT_SHUFFLE")
+    // partition count scales with the DATA (cores is only the floor); see
+    // graft.util.Tuning. Logged WITH its byte basis: a silent 0-byte
+    // corpus read (non-local dir, typo'd path) would otherwise masquerade
+    // as a deliberate cores-floor posture
+    val shuffle = graft.util.Tuning.shufflePartitions(sfDir, coreFloor)
+    System.err.println(s"[bench] shuffle.partitions=$shuffle derived from " +
+      s"${graft.util.Tuning.corpusBytes(sfDir)} corpus bytes, cores=$coreFloor")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      // partition count scales with the DATA (cores is only the floor):
-      // at sf≤0.1 this IS cores — the historical bench posture — and at
-      // the sf10 tier it reaches the measured spill-free floor without a
-      // hand-set SPARK_GRAFT_SHUFFLE. See graft.util.Tuning. Per-query
-      // refinement below (runOnce): only the pair-expansion class takes
-      // the derived count; narrow composites keep the cores floor.
-      .config("spark.sql.shuffle.partitions",
-        fixedShuffle.getOrElse {
-          val n = graft.util.Tuning.shufflePartitions(sfDir, coreFloor)
-          // log the derived count WITH its byte basis (ScaleCheck's rule):
-          // a silent 0-byte corpus read (non-local dir, typo'd path) would
-          // otherwise masquerade as a deliberate cores-floor posture
-          System.err.println(s"[bench] shuffle.partitions=$n derived from " +
-            s"${graft.util.Tuning.corpusBytes(sfDir)} corpus bytes, cores=$coreFloor")
-          n.toString
-        })
+      .config("spark.sql.shuffle.partitions", shuffle.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      // BENCH-SCALE POSTURE — measured, not assumed: 5-pass A/B at sf0.1
-      // (round 5) put AQE-off at 21.0 s vs AQE-on 22.3 s. At bench scale
-      // every AQE stage materialization + re-plan costs more than its
-      // decisions save (plans are already broadcast-hinted and the reduce
-      // sides are tiny); on a 100 TB cluster AQE's skew splitting and
-      // runtime coalescing are worth far more than the re-planning
-      // latency, so production keeps it ON — this default, like
-      // preferSortMergeJoin below, is bench-only. Verify runs with
-      // Spark's defaults (AQE on) so correctness covers the production
-      // posture. Override: SPARK_GRAFT_AQE=true.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // coalesce reduce stages by TARGET SIZE, not by keeping cores busy:
-      // at bench scale 32 near-empty reduce tasks per stage are pure
-      // scheduling overhead, and at cluster scale size-first coalescing is
-      // the documented-recommended posture anyway (parallelism comes from
-      // the data volume there)
+      // BENCH-SCALE POSTURE — do not copy to a cluster; Verify and the
+      // production code paths keep Spark's defaults. At bench scale every
+      // AQE stage materialization + re-plan costs more than its decisions
+      // save (round-5 A/B at sf0.1: AQE-off 21.0 s vs on 22.3 s), and
+      // reduce stages coalesce by target size, not by keeping cores busy.
+      .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // BENCH-SCALE POSTURE — do not copy to a cluster. At sf0.1 hash
-      // joins beat sort-merge (no sort phase) and every build side fits
-      // in memory. On a 100 TB cluster a shuffled-hash join with a large
-      // build side OOMs where SMJ spills, and AQE only rescues plans it
-      // re-plans. Verify and production code paths intentionally OMIT
-      // this flag and keep Spark's default preference (BucketingSpec
-      // exercises the default-posture sort-merge path).
+      // hash joins beat sort-merge here (no sort phase, every build side
+      // fits in memory); on a cluster a large build side OOMs where SMJ
+      // spills
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // BENCH-SCALE POSTURE — single-host, in-memory exchanges: every
-      // shuffle/broadcast/cached-column byte here crosses RAM, never a
-      // NIC or disk worth compressing, so LZ4 is pure CPU tax on tiny
-      // blocks. On a real cluster compression pays for itself in network
-      // and spill bandwidth — production keeps Spark's defaults (ON),
-      // like the AQE/SMJ flags above. Override: SPARK_GRAFT_COMPRESS=true.
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_COMPRESS", "false"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_COMPRESS", "false"))
-      .config("spark.broadcast.compress",
-        sys.env.getOrElse("SPARK_GRAFT_COMPRESS", "false"))
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_COMPRESS", "false"))
+      // single-host, in-memory exchanges: no NIC or disk worth
+      // compressing for, so LZ4 is pure CPU tax on tiny blocks
+      .config("spark.shuffle.compress", "false")
+      .config("spark.shuffle.spill.compress", "false")
+      .config("spark.broadcast.compress", "false")
+      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // session table cache (see Tables.table): the suite reads the same
-      // nine tables 78 times; first use per pass materializes, the
-      // clearCache at each pass boundary drops it — every pass re-pays
-      // the scans once, like the shared shingle index. Bench-only, like
-      // the AQE posture. Override: SPARK_GRAFT_CACHE_TABLES=false.
-      .config("spark.graft.cacheTables",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_TABLES", "true"))
+      // tables dozens of times; each pass boundary drops and re-warms it
+      .config("spark.graft.cacheTables", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    // local-iteration subset (comma-separated full names or qNN
-    // prefixes); unset — the driver's posture — benches everything
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val benched = SparkEntry.registry.filter(_.bench)
-      .filter(q => only.forall(f =>
-        f(q.name) || f(q.name.takeWhile(_ != '_'))))
 
-    // With the session table cache on, re-materialize it at each pass
-    // boundary OUTSIDE per-query timing: the DuckDB baseline's files are
-    // hot in the OS page cache across its whole run (never counted), so
-    // warm table storage is the symmetric starting state — each query
-    // then measures COMPUTE over warm storage in both engines. Derived
-    // computation (the shingle index family) stays inside per-query
-    // timing as before; only raw table IO is pre-warmed.
-    def warmStorage(): Unit =
-      if (spark.conf.getOption("spark.graft.cacheTables").contains("true")) {
-        for (t <- Seq("region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings"))
-          scala.util.Try(graft.util.Tables.table(spark, sfDir, t).count())
-      }
+    // Pass boundary: drop EVERYTHING, including the shared shingle index
+    // (Caches.sharedIndex), so each pass re-pays the one corpus hash inside
+    // its first family query's time; then re-warm raw table storage
+    // OUTSIDE the timing — the DuckDB baseline's files sit hot in the OS
+    // page cache, so each query measures compute over warm storage in both
+    // engines.
+    def passBoundary(): Unit = {
+      spark.sqlContext.clearCache()
+      for (t <- Seq("region", "nation", "customer", "supplier", "part",
+          "orders", "lineitem", "events", "documents", "embeddings"))
+        scala.util.Try(graft.util.Tables.table(spark, sfDir, t).count())
+    }
     def runOnce(q: graft.queries.Q): Boolean =
       try {
-        // two-class partition posture (r13, BASELINE.md): pair-expansion
-        // queries take the data-derived count, narrow composites the
-        // cores floor. At sf≤0.1 both classes land on cores (the Tuning
-        // hysteresis), so the historical bench posture is bit-identical;
-        // the split only engages at the sf1+/sf10 tiers. A hand-set
-        // SPARK_GRAFT_SHUFFLE still pins every query.
-        if (fixedShuffle.isEmpty)
-          spark.conf.set("spark.sql.shuffle.partitions",
-            graft.util.Tuning.queryPartitions(q.pairExpansion, sfDir, coreFloor))
-        // queries may persist intermediates (their materialized-CTE
-        // analog); drop those between runs so no query plan-matches
-        // another run's cache and the timing stays per-query honest.
-        // The SHARED shingle index (Caches.sharedIndex) deliberately
-        // survives: it is the dedup family's materialized view, built
-        // once per PASS (the clearCache at each pass boundary below
-        // drops it) — so each pass's total pays the corpus hash exactly
-        // once, like a session running the family together, instead of
-        // three times.
+        // pair-expansion queries take the data-derived count, narrow
+        // composites the cores floor (equal at sf≤0.1; see Tuning)
+        spark.conf.set("spark.sql.shuffle.partitions",
+          graft.util.Tuning.queryPartitions(q.pairExpansion, sfDir, coreFloor))
+        // drop the previous query's persisted intermediates so no plan
+        // matches another query's cache; the shared index survives
         graft.util.Caches.clearTransient()
-        // label the consumer for kernel-cost attribution (r19): the
-        // sidecar's kernels_paid_by map records which query's timed row
-        // carries each shared kernel's build this pass
-        graft.util.Caches.setConsumer(Some(q.name))
-        try {
-          q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        } finally graft.util.Caches.setConsumer(None)
+        q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         true
       } catch { case _: Throwable => false }
 
-    // committed reference, or the operator's override (defensive parse:
-    // a malformed override falls back to the committed values, loudly —
-    // a typo must not silently re-baseline the verdict)
-    val controlRef: Seq[(String, Double)] =
-      sys.env.get("SPARK_GRAFT_CTRL_REF").flatMap { s =>
-        val vs = s.split(",").map(v => v.trim.toDoubleOption)
-        if (vs.length == DefaultControlRef.length && vs.forall(_.exists(_ > 0)))
-          Some(DefaultControlRef.map(_._1).zip(vs.map(_.get)))
-        else {
-          System.err.println(s"[bench] WARNING: malformed " +
-            s"SPARK_GRAFT_CTRL_REF '$s' (want ${DefaultControlRef.size} " +
-            "positive comma-separated seconds) — using the committed reference")
-          None
-        }
-      }.getOrElse(DefaultControlRef)
-    val ctrlOverridden = controlRef != DefaultControlRef
-
-    // in-run window CONTROLS (see DefaultControlRef): first measurement
-    // AFTER warmup (steady-state engine, so the control reads the
-    // WINDOW, not JIT), second after everything else — a burst arriving
-    // mid-run shows up in at least one end
-    // a control that CRASHES (runOnce false) or is missing from the
-    // registry reads -1 and the verdict becomes 'control_failed' below
-    // (r17 advice): letting a crashed control's short elapsed time pass
-    // the quiet check would self-certify exactly the windows the
-    // controls exist to flag
-    def controlRun(): Seq[Double] = controlRef.map { case (name, _) =>
-      SparkEntry.registry.find(_.name == name).fold(-1.0) { q =>
-        spark.sqlContext.clearCache(); warmStorage()
-        val t0 = System.nanoTime()
-        val ok = runOnce(q)
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-    }
-
-    // re-measure mode (see the DefaultControlRef portability note):
-    // print the per-control min over N control runs and exit. A SET but
-    // unparseable value exits non-zero (r17 advice): the operator asked
-    // for measure-and-exit, so silently falling through to a FULL bench
-    // is the opposite of the intent — the one env var here whose
-    // failure mode must not be a quiet fallback
-    sys.env.get("SPARK_GRAFT_CTRL_MEASURE")
-      .map { raw =>
-        raw.trim.toIntOption.getOrElse {
-          System.err.println(s"[bench] ERROR: malformed " +
-            s"SPARK_GRAFT_CTRL_MEASURE '$raw' (want a positive integer) " +
-            "— refusing to fall through to a full benchmark")
-          spark.stop(); sys.exit(2)
-        }
-      }
-      .foreach { n0 =>
-        val n = n0.max(1)
-        spark.sqlContext.clearCache(); warmStorage()
-        controlRef.foreach(c =>
-          SparkEntry.registry.find(_.name == c._1).foreach(runOnce)) // warmup
-        val runs = (1 to n).map(_ => controlRun())
-        def f2m(v: Double) =
-          String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-        val mins = controlRef.indices.map { i =>
-          val ok = runs.map(_(i)).filter(_ >= 0)
-          if (ok.isEmpty) -1.0 else ok.min
-        }
-        println(controlRef.map(_._1).zip(mins)
-          .map { case (nm, v) => s""""$nm":${f2m(v)}""" }
-          .mkString("""{"ctrl_ref":{""", ",",
-            s"""},"runs":$n,"sf":"${new java.io.File(sfDir).getName}"}"""))
-        spark.stop(); sys.exit(0)
-      }
-
-    spark.sqlContext.clearCache() // pass boundary: shared index rebuilt within the pass
-    warmStorage()
+    passBoundary()
     benched.foreach(runOnce) // warmup (JIT, codegen cache, parquet footers)
-
-    val ctrlFirst = controlRun()
-
-    // N timed passes after warmup, per-query MIN reported — single runs
-    // swing ±20% from JVM/host noise; min-of-N is the steady-state figure
-    // BASELINE.md describes, and "passes" in the JSON records N so the
-    // artifact and the methodology claim match.
-    // defensive parse: a typo'd env var falls back to the default instead
-    // of crashing the whole bench with NumberFormatException. Default 5:
-    // host co-tenancy cycles over minutes and inflates whole passes up to
-    // ~15% (round-5 measurements: identical code 16.2–20.5 s by load);
-    // five passes span several load cycles so the per-query min recovers
-    // the steady-state figure a loaded 3-pass run misses.
-    val passes = scala.util.Try(sys.env("SPARK_GRAFT_BENCH_PASSES").trim.toInt)
-      .getOrElse(5).max(1)
-    val timed: Seq[Map[String, Double]] = (1 to passes).map { _ =>
-      // pass boundary: drop EVERYTHING including the shared shingle
-      // index, so every pass re-pays the one corpus hash (its builder —
-      // the first family query — carries it in its own time); table
-      // storage re-warms OUTSIDE the timing (page-cache symmetry)
-      spark.sqlContext.clearCache()
-      warmStorage()
-      benched.map { q =>
-        val t0 = System.nanoTime()
-        val ok = runOnce(q)
-        q.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }.toMap
-    }
+    passBoundary()
     val results = benched.map { q =>
-      val vs = timed.map(_(q.name))
-      // a query that crashed in ANY pass is a failure — min-of-N must not
-      // hide a flaky query behind one lucky pass
-      q.name -> (if (vs.exists(_ < 0)) -1.0 else vs.min)
+      val t0 = System.nanoTime()
+      val ok = runOnce(q)
+      q.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     val total = results.map(_._2).filter(_ >= 0).sum
     // failures must be LOUD: a crashed query is excluded from the total,
@@ -365,208 +99,24 @@ object Bench {
     val failed = results.collect { case (k, v) if v < 0 => k }
     failed.foreach(k => System.err.println(s"[bench] FAILED: $k"))
 
-    // ---- same-window pair denominator (BASELINE.md pair methodology,
-    // now IN the driver artifact). A lone numerator reads as a phantom
-    // regression whenever the window was loaded (the r9/r10 verdict
-    // trap); running the DuckDB oracle suite back-to-back in the SAME
-    // window and embedding {spark_s, duckdb_s, ratio, loadavg} makes
-    // every BENCH_rN self-denominated. Degrades loudly-but-gracefully:
-    // any missing driver-side tool (python3/duckdb are not this
-    // library's dependencies) or a failed query skips the pair and
-    // ships the old artifact shape. SPARK_GRAFT_PAIR=false opts out
-    // (local subset iteration).
-    val loadBefore = sysLoad()
-    // EVERY skip branch is loud and names its reason (not only the
-    // exception path): a misconfigured run — bench launched from a
-    // directory without tools/baseline.py, a subset filter, a failed
-    // query — must not quietly ship a denominator-less artifact
-    val skipReason: Option[String] =
-      if (sys.env.get("SPARK_GRAFT_PAIR").contains("false"))
-        Some("SPARK_GRAFT_PAIR=false")
-      else if (failed.nonEmpty) Some(s"${failed.size} queries failed")
-      else if (only.nonEmpty) Some("SPARK_GRAFT_BENCH_ONLY subset")
-      else if (!new java.io.File("tools/baseline.py").exists())
-        Some(s"tools/baseline.py not found under ${new java.io.File(".").getAbsolutePath}")
-      else None
-    skipReason.foreach(r =>
-      System.err.println(s"[bench] NOTE: pair denominator skipped: $r"))
-    val pairJson: Option[String] =
-      if (skipReason.isDefined) None
-      else try {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-pair-")
-        val oraclePath = tmp.resolve("oracle_sql.json").toString
-        graft.util.OracleJson.write(oraclePath)
-        // defensive parse (the passes convention above): a typo'd env
-        // var must not corrupt the artifact JSON it gets embedded into
-        val duckPasses = scala.util.Try(
-          sys.env("SPARK_GRAFT_PAIR_DUCK_PASSES").trim.toInt)
-          .getOrElse(3).max(1)
-        val p = new ProcessBuilder("python3", "tools/baseline.py",
-          sfDir, oraclePath, duckPasses.toString).start()
-        // drain stderr CONCURRENTLY: reading stdout to EOF first would
-        // deadlock against a child blocked on a full stderr pipe
-        val errBuf = new java.io.ByteArrayOutputStream()
-        val drainer = new Thread(() =>
-          p.getErrorStream.transferTo(errBuf): Unit)
-        drainer.setDaemon(true)
-        drainer.start()
-        val outBytes = p.getInputStream.readAllBytes()
-        if (p.waitFor() != 0) {
-          drainer.join(2000)
-          throw new RuntimeException(
-            s"baseline.py exit ${p.exitValue()}: ${errBuf.toString("UTF-8").takeRight(300)}")
-        }
-        val lastLine =
-          new String(outBytes, "UTF-8").trim.linesIterator.toSeq.last
-        val node = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(lastLine)
-        val duckQ = node.get("queries")
-        import scala.jdk.CollectionConverters._
-        val duckMap = duckQ.fieldNames().asScala
-          .map(n => n -> duckQ.get(n).asDouble()).toMap
-        // the honest ratio compares the SAME query set: benched ∩ oracled
-        val rm = results.toMap
-        val common = results.collect {
-          case (k, v) if v >= 0 && duckMap.contains(k) => k
-        }
-        val sparkS = common.map(rm).sum
-        val duckS = common.map(duckMap).sum
-        val loadAfter = sysLoad()
-        def f3(v: Double) =
-          String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-        def f2(v: Double) =
-          String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-        Some(s""""pair":{"spark_s":${f3(sparkS)},"duckdb_s":${f3(duckS)},""" +
-          s""""ratio":${f3(if (duckS > 0) sparkS / duckS else -1.0)},""" +
-          s""""common":${common.size},"duck_passes":$duckPasses,""" +
-          // three values: bench LAUNCH (post-gate), pair start, pair end —
-          // the launch figure is what the quiet-window gate certifies
-          s""""loadavg":[${f2(loadStart)},${f2(loadBefore)},${f2(loadAfter)}]}""")
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[bench] WARNING: pair denominator skipped: $e")
-          None
-      }
-    // second control measurement — LAST timed work of the run, so a
-    // burst arriving after the pair still marks the artifact
-    val ctrlLast = controlRun()
-    def f2v(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    // an explicit SPARK_GRAFT_CTRL_REF asserts quiet values for THIS
-    // sfDir/box, so it lifts the sf0.1-only gate (the committed values
-    // are sf0.1's); a crashed/missing control is its own verdict — a
-    // failure must not read as 'loaded' (and certainly not 'quiet')
-    val refOk = ctrlOverridden || new java.io.File(sfDir).getName == "sf0.1"
-    val windowVerdict =
-      windowVerdictOf(ctrlFirst, ctrlLast, controlRef.map(_._2), refOk)
-    // compact on stdout (every byte competes with the 2000-char tail —
-    // ctrl = [first q01, first q29, last q01, last q29]); the sidecar
-    // carries the named form with the committed reference
-    def windowJson(sidecar: Boolean): String =
-      if (sidecar)
-        s""","window":{"controls":[${controlRef.map(c => "\"" + c._1 + "\"")
-          .mkString(",")}],""" +
-          s""""control_first":[${ctrlFirst.map(f2v).mkString(",")}],""" +
-          s""""control_last":[${ctrlLast.map(f2v).mkString(",")}],""" +
-          s""""ref":[${controlRef.map(c => f2v(c._2)).mkString(",")}],""" +
-          s""""ref_overridden":$ctrlOverridden,""" +
-          s""""quiet_factor":$ControlQuietFactor,""" +
-          s""""loaded_factor":$ControlLoadedFactor,""" +
-          s""""verdict":"$windowVerdict"}"""
-      else
-        s""","window":{"ctrl":[${(ctrlFirst ++ ctrlLast).map(f2v)
-          .mkString(",")}],"v":"$windowVerdict"}"""
-
-    // The driver keeps only the LAST 2000 chars of stdout — BENCH_r07.json
-    // lost q01–q10 to that window. The stdout line therefore rounds
-    // per-query seconds to 10 ms (r15, when the 129-query map outgrew the
-    // 1 ms budget; the per-query floor is ~60 ms and cross-round reads
-    // compare 0.1 s-scale moves, so 2 decimals still lose nothing — and
-    // the TOTAL keeps 3) and omits an empty failed list; full precision
-    // goes to a sidecar file for regression archaeology.
-    // stdout keys are the unique qNN prefix ("q79", not
-    // "q79_bigram_lift") — at 80+ queries the full names alone overflow
-    // the capture window; the sidecar keeps full names and is the
-    // canonical artifact (README "Benchmarks")
-    def key(name: String, sidecar: Boolean): String =
-      if (sidecar) name else name.takeWhile(_ != '_')
-    def line(fmt: Double => String, sidecar: Boolean): String = {
-      // per-QUERY values take one fewer decimal than the total on stdout
-      // (the 2000-char window prices every map entry ×129; the total is
-      // one field)
-      val qfmt: Double => String =
-        if (sidecar) fmt
-        else v => String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-      val qs = results.map { case (k, v) => "\"" + key(k, sidecar) + "\":" + qfmt(v) }
-        .mkString("{", ",", "}")
-      // stdout caps the failed list at 10 names + a count: with 100+
-      // queries an everyone-failed list alone would blow the 2000-char
-      // window, and the first failures + the count are what a broken-run
-      // triage needs; the sidecar always carries the full list
-      val failedShown = if (sidecar) failed else failed.take(10)
-      val failedJson =
-        if (failed.isEmpty && !sidecar) ""
-        else {
-          val n = if (sidecar) "" else s""""failed_n":${failed.size},"""
-          failedShown.map("\"" + key(_, sidecar) + "\"")
-            .mkString(s""",$n"failed":[""", ",", "]")
-        }
-      // "passes" rides only in the sidecar: every stdout byte competes
-      // with the 2000-char capture window (BenchArtifactSpec pins the
-      // worst-case budget)
-      val passesJson = if (sidecar) s""","passes":$passes""" else ""
-      // kernel-cost attribution (r19, sidecar only): which query's row
-      // paid each shared kernel's build in the final timed pass — under
-      // the shared-kernel discipline per-query rows are MARGINAL costs
-      // (first consumer in registry order carries the build), and this
-      // map makes that attribution explicit instead of readable as a
-      // regression. Keys are kernel cache keys (name:sfDir[@seam]).
-      val kernelsJson =
-        if (!sidecar) ""
-        else {
-          val m = graft.util.Caches.kernelBuilds(spark)
-          if (m.isEmpty) ""
-          else m.toSeq.sortBy(_._1)
-            .map { case (k, q) => s""""${k.replace("\"", "'")}":"$q"""" }
-            .mkString(""","kernels_paid_by":{""", ",", "}")
-        }
-      // the LAUNCH loadavg rides in the sidecar unconditionally (the pair
-      // fragment can be skipped; the window record must not be) — stdout
-      // gets it via the pair's three-element loadavg, budgeted in
-      // BenchArtifactSpec
-      val loadJson = if (sidecar)
-        s""","load_start":${String.format(java.util.Locale.ROOT, "%.2f",
-          Double.box(loadStart))}""" else ""
-      // the pair rides on BOTH stdout and sidecar — it is the round
-      // artifact's denominator, not archaeology; likewise the window
-      // self-certification (r16): a loaded driver window is then
-      // attributable from the artifact alone
-      val pairPart = pairJson.fold("")("," + _)
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec"$passesJson$loadJson$kernelsJson,"queries":$qs$failedJson$pairPart${windowJson(sidecar)},"sf":"${new java.io.File(sfDir).getName}"}"""
-    }
-    // Locale.ROOT: Scala's f"" interpolator uses the JVM default locale,
-    // which under comma-decimal locales (de_DE, ...) would emit 22,43 —
-    // invalid JSON
-    val out = line(v => String.format(java.util.Locale.ROOT, "%.3f",
-      Double.box(v)), sidecar = false)
+    // Bench's caller keeps only the LAST 2000 chars of stdout, so the line
+    // keys queries by their unique qNN prefix, rounds them to 10 ms, and
+    // lists at most the first 10 failures plus a count (BenchArtifactSpec
+    // pins the worst case). Locale.ROOT: a comma-decimal default locale
+    // would emit invalid JSON.
+    def fmt(digits: Int)(v: Double) =
+      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+    def key(name: String) = "\"" + name.takeWhile(_ != '_') + "\""
+    val qs = results.map { case (k, v) => key(k) + ":" + fmt(2)(v) }
+      .mkString("{", ",", "}")
+    val failedJson =
+      if (failed.isEmpty) ""
+      else failed.take(10).map(key)
+        .mkString(s""","failed_n":${failed.size},"failed":[""", ",", "]")
+    val out = s"""{"metric":"total","value":${fmt(3)(total)},"unit":"sec",""" +
+      s""""queries":$qs$failedJson,"sf":"${new java.io.File(sfDir).getName}"}"""
     if (out.length > 2000)
       System.err.println(s"[bench] WARNING: JSON line ${out.length} chars exceeds the driver's 2000-char tail window")
-    // default the sidecar to a SCRATCH path, not the repo (r14/r15: the
-    // end-of-round harness runs Bench with no env and kept clobbering the
-    // committed quiet-window bench_full.json with its loaded-window run;
-    // the committed sidecar should only change deliberately, via an
-    // explicit SPARK_GRAFT_BENCH_OUT)
-    val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      s"${System.getProperty("java.io.tmpdir")}/graft_bench_full.json")
-    try {
-      val w = new java.io.PrintWriter(sidecar, "UTF-8")
-      try w.println(line(_.toString, sidecar = true)) finally w.close()
-    } catch {
-      // the sidecar exists for regression archaeology — losing it must
-      // be LOUD (the file's own rule), but must not fail the bench
-      case e: Exception =>
-        System.err.println(s"[bench] WARNING: could not write $sidecar: $e")
-    }
     println(out)
     spark.stop()
   }

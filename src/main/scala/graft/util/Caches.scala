@@ -36,27 +36,26 @@ object Caches {
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, java.lang.ref.SoftReference[DataFrame]]]()
 
-  // ---- kernel-cost attribution (r19, the verdict's ask #7) ------------
-  // Under the shared-kernel discipline a bench row is a MARGINAL cost:
-  // the first consumer in registry order constructs (and, at its timed
-  // action, materializes) every kernel it names; later consumers ride
-  // the cache. Bench labels the current consumer around each query and
-  // the rebuild branch below records which consumer paid each kernel's
-  // build, so the sidecar can carry a `kernels_paid_by` map and a future
-  // round cannot misread first-consumer attribution as a regression.
+  // ---- kernel-cost attribution --------------------------------------
+  // Under the shared-kernel discipline a query's cost is MARGINAL: the
+  // first consumer constructs (and, at its timed action, materializes)
+  // every kernel it names; later consumers ride the cache. A caller that
+  // labels the current consumer around each query (perfbench's
+  // RegistrySweep, for its `caches.kernel_builds` count) can read back
+  // from the rebuild branch below which consumer paid each kernel's build.
   private val buildLog =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, String]]()
   @volatile private var currentConsumer: Option[String] = None
 
-  /** Label the consumer whose plan construction is running (Bench sets
-    * the query name around each `fn` call; None outside).
+  /** Label the consumer whose plan construction is running (the caller
+    * sets a query label around each `fn` call; None outside).
     */
   def setConsumer(name: Option[String]): Unit = currentConsumer = name
 
   /** kernel name → the consumer that (re)built it, for `s`. Snapshot of
-    * the LAST (re)build of each kernel — under Bench's pass discipline
-    * that is the current pass's first consumer in registry order.
+    * the LAST (re)build of each kernel, across every label ever set in
+    * the session.
     */
   def kernelBuilds(s: SparkSession): Map[String, String] =
     shared.synchronized {

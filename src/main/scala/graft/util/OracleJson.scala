@@ -3,9 +3,8 @@ package graft.util
 import java.nio.file.{Files, Paths}
 
 /** Serializes [[graft.SparkEntry.oracleSql]] as the driver-shaped
-  * `oracle_sql.json` — shared by Verify (the correctness dump) and Bench
-  * (the same-window pair denominator), so the two artifacts can never
-  * disagree on escaping.
+  * `oracle_sql.json`, written by Verify (the correctness dump) and read
+  * by `tools/diff.py` and `tools/pair.py`.
   */
 object OracleJson {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -27,28 +27,14 @@ class BenchArtifactSpec extends AnyFunSuite {
     val prefix = """{"metric":"total","value":99999.999,"unit":"sec","queries":{""".length
     val suffix = """},"sf":"sf0.001"}""".length
     // Bench appends `"failed_n":N,"failed":[...]` when queries crash,
-    // capped at the FIRST 10 names on stdout (the sidecar carries the
-    // full list) — budget that worst case so a crashing pass still
-    // yields a parseable tail, which is exactly when the artifact
-    // matters most
+    // capped at the FIRST 10 names on stdout (stderr's `[bench] FAILED:`
+    // lines carry the full list) — budget that worst case so a crashing
+    // pass still yields a parseable tail, which is exactly when the
+    // artifact matters most
     val failedNames = shorts.sortBy(-_.length).take(10)
     val failedWorst = s""","failed_n":${shorts.size},"failed":[""".length +
       failedNames.map(_.length + 2).sum + (failedNames.size - 1) + 1
-    // the same-window pair fragment (r11): worst case with 5-digit
-    // seconds on both sides and 3-digit common/pass counts
-    val pairWorst = (""","pair":{"spark_s":99999.999,"duckdb_s":99999.999,""" +
-      """"ratio":99.999,"common":999,"duck_passes":999,""" +
-      """"loadavg":[99.99,99.99,99.99]}""").length
-    // the r16 window self-certification fragment: four control values
-    // at 2 decimals (a pathological window can push a control past
-    // 1000 s — budget 7-char values, the r17 advice) + the longest
-    // verdict word ('control_failed'; the r18 three-band verdict's
-    // 'quiet'/'warm'/'loaded' are all shorter, so the budget stands)
-    val windowWorst =
-      (""","window":{"ctrl":[9999.99,9999.99,9999.99,9999.99],""" +
-        """"v":"control_failed"}""").length
-    val worst = prefix + entries.sum + (entries.size - 1) + suffix +
-      failedWorst + pairWorst + windowWorst
+    val worst = prefix + entries.sum + (entries.size - 1) + suffix + failedWorst
     assert(worst < 2000,
       s"projected bench JSON line $worst chars for ${benched.size} benched queries — " +
         "the driver captures only the last 2000; shorten names or the format")
@@ -71,26 +57,5 @@ class BenchArtifactSpec extends AnyFunSuite {
     assert(!after.contains("println(") && !after.contains("System.out"),
       "stdout write after the contract JSON — the driver parses the " +
         s"final stdout line; move it above or to stderr:\n$after")
-  }
-
-  test("window verdict bands (r18): quiet ≤×2, warm ×2–×3, loaded >×3; control_failed dominates; both ends count") {
-    val ref = Seq(0.12, 1.30)
-    def v(f: Seq[Double], l: Seq[Double], ok: Boolean = true) =
-      Bench.windowVerdictOf(f, l, ref, ok)
-    // the r18 closing pair's actual controls read quiet under ×2
-    assert(v(Seq(0.05, 1.49), Seq(0.09, 2.30)) == "quiet")
-    // BENCH_r17's 2.76 s first q29 control (2.1× reference) is exactly
-    // the window the warm band names — no longer a quiet certification
-    assert(v(Seq(0.10, 2.76), Seq(0.10, 1.20)) == "warm")
-    // ×2 boundary is inclusive for quiet; just past it reads warm
-    assert(v(Seq(0.24, 1.20), Seq(0.10, 2.60)) == "quiet")
-    assert(v(Seq(0.241, 1.20), Seq(0.10, 1.20)) == "warm")
-    // past ×3 at EITHER end is loaded
-    assert(v(Seq(0.10, 1.20), Seq(0.10, 3.91)) == "loaded")
-    assert(v(Seq(0.37, 1.20), Seq(0.10, 1.20)) == "loaded")
-    // a crashed control can never certify anything
-    assert(v(Seq(-1.0, 1.00), Seq(0.10, 1.00)) == "control_failed")
-    // no applicable reference → unknown, however fast the controls
-    assert(v(Seq(0.05, 1.00), Seq(0.05, 1.00), ok = false) == "unknown")
   }
 }

@@ -4,8 +4,8 @@
 Runs every SQL in <oracle_sql.json> against the parquet tables in <sfDir>
 with stock DuckDB (all cores, same box as Bench), min-of-N per query with a
 warmup pass, every result fully materialized via fetchall(). Prints a
-per-query table and one JSON line, mirroring Bench.scala's methodology so
-the ratio in BASELINE.md compares like with like.
+per-query table and one JSON line. tools/pair.py runs it with passes=1,
+Bench's warmup plus one timed pass, so its ratio compares like with like.
 
 Usage: python3 tools/baseline.py <sfDir> <oracle_sql.json> [passes=3]
 """

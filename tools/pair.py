@@ -2,17 +2,17 @@
 """Same-window bench pair: run Bench (Spark) and tools/baseline.py
 (DuckDB) back-to-back in ONE invocation and emit a single JSON artifact
 carrying numerator, denominator, their ratio over the common query set,
-and the host load — so a round's bench number ships WITH the context that
-makes it comparable (both engines swing with co-tenancy; a lone numerator
-reads as a regression whenever the window was loaded — the BASELINE.md
-pair methodology, automated).
+and the host load — so a bench number ships WITH the context that makes
+it comparable (both engines swing with co-tenancy; a lone numerator
+reads as a regression whenever the window was loaded).
 
-Usage: python3 tools/pair.py [sfDir] [outJson] [benchPasses] [duckPasses]
-Defaults: /root/testdata/sf0.1  PAIR.json  5  3
-(pass counts mirror each tool's own default / BASELINE.md methodology)
+Both engines run one warmup and one timed pass, like with like.
 
-Writes outJson and prints it; side artifacts (bench_full.json,
-oracle_sql.json) land in a temp dir.
+Usage: python3 tools/pair.py [sfDir] [outJson]
+Defaults: the sf0.1 test corpus, PAIR.json
+
+Writes outJson and prints a one-line summary; oracle_sql.json lands in a
+temp dir.
 """
 import glob, json, os, subprocess, sys, tempfile, time
 
@@ -26,11 +26,15 @@ def loadavg():
     return [round(v, 2) for v in os.getloadavg()]
 
 
+def short(name):
+    """Bench's stdout key: the query's unique qNN prefix
+    (BenchArtifactSpec asserts the prefixes are unique)."""
+    return name.split("_", 1)[0]
+
+
 def main():
     sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "PAIR.json"
-    bench_passes = sys.argv[3] if len(sys.argv) > 3 else "5"
-    duck_passes = sys.argv[4] if len(sys.argv) > 4 else "3"
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     os.chdir(repo)
     tmp = tempfile.mkdtemp(prefix="graft-pair-")
@@ -45,69 +49,35 @@ def main():
 
     load0 = loadavg()
 
-    # numerator: Bench, full-precision sidecar. SPARK_GRAFT_BENCH_OUT
-    # names a PROMOTION target (the deliberate path for refreshing the
-    # committed bench_full.json from a closing pair) — Bench itself
-    # writes to the temp sidecar, and the copy to the target happens
-    # only after the window verdict is known: a git-tracked target is
-    # refused unless the run self-certified 'quiet' (r17 advice — a
-    # loaded run must not silently refresh the committed artifact).
-    bench_target = os.environ.get("SPARK_GRAFT_BENCH_OUT")
-    bench_sidecar = f"{tmp}/bench_full.json"
-    env = dict(os.environ,
-               SPARK_GRAFT_SF_DIR=sfdir,
-               SPARK_GRAFT_BENCH_PASSES=bench_passes,
-               SPARK_GRAFT_BENCH_OUT=bench_sidecar)
+    # numerator: Bench's one stdout JSON line, always its last
     t0 = time.time()
-    subprocess.run(["java", "-Xmx24g", "-cp", classpath(), "graft.Bench"],
-                   check=True, capture_output=True, env=env)
+    bench_out = subprocess.run(
+        ["java", "-Xmx24g", "-cp", classpath(), "graft.Bench"],
+        check=True, capture_output=True, text=True,
+        env=dict(os.environ, SPARK_GRAFT_SF_DIR=sfdir)).stdout
     bench_wall = time.time() - t0
-    bench = json.load(open(bench_sidecar))
+    bench = json.loads(bench_out.strip().splitlines()[-1])
     if bench.get("failed"):
-        sys.exit(f"bench reported failures: {bench['failed']}")
-    if bench_target:
-        verdict = bench.get("window", {}).get("verdict", "unknown")
-        tracked = subprocess.run(
-            ["git", "ls-files", "--error-unmatch", bench_target],
-            capture_output=True).returncode == 0
-        # 'warm' (r18: controls within x3 but above the x2 quiet band) is
-        # promotable like quiet -- the total/ratio remain comparable --
-        # but loudly: its PER-QUERY rows are not window-comparable
-        if tracked and verdict not in ("quiet", "warm"):
-            sys.stderr.write(
-                f"[pair] REFUSING to overwrite tracked {bench_target}: "
-                f"window verdict {verdict!r} (run kept at {bench_sidecar}; "
-                "re-run in a quiet window)\n")
-        else:
-            if verdict == "warm":
-                sys.stderr.write(
-                    f"[pair] NOTE: promoting a 'warm'-window sidecar to "
-                    f"{bench_target} -- total/ratio comparable, but read "
-                    "per-query movement against a serialized pair, not "
-                    "this artifact\n")
-            elif verdict != "quiet":
-                sys.stderr.write(f"[pair] WARNING: promoting a "
-                                 f"{verdict!r}-window sidecar to "
-                                 f"{bench_target} (untracked target)\n")
-            import shutil
-            shutil.copyfile(bench_sidecar, bench_target)
+        sys.exit(f"bench reported {bench['failed_n']} failures, "
+                 f"first: {bench['failed']}")
 
     load1 = loadavg()
 
     # denominator: DuckDB over the same oracle SQL set, same window
     t0 = time.time()
     duck_out = subprocess.run(
-        [sys.executable, "tools/baseline.py", sfdir, oracle_path, duck_passes],
+        [sys.executable, "tools/baseline.py", sfdir, oracle_path, "1"],
         check=True, capture_output=True, text=True).stdout
     duck_wall = time.time() - t0
     duck = json.loads(duck_out.strip().splitlines()[-1])
+    duck_q = {short(n): v for n, v in duck["queries"].items()}
 
     load2 = loadavg()
 
     # the honest ratio compares the SAME query set: benched ∩ oracled
-    common = sorted(set(bench["queries"]) & set(duck["queries"]))
+    common = sorted(set(bench["queries"]) & set(duck_q))
     spark_s = round(sum(bench["queries"][q] for q in common), 3)
-    duckdb_s = round(sum(duck["queries"][q] for q in common), 3)
+    duckdb_s = round(sum(duck_q[q] for q in common), 3)
     pair = {
         "metric": "bench_pair",
         "sf": os.path.basename(sfdir.rstrip("/")),
@@ -118,16 +88,14 @@ def main():
         "spark_total_all": bench["value"],
         "spark_benched": len(bench["queries"]),
         "duckdb_total_all": duck["value"],
-        "duckdb_oracled": len(duck["queries"]),
-        "bench_passes": bench.get("passes"),
-        "duckdb_passes": int(duck_passes),
+        "duckdb_oracled": len(duck_q),
         "bench_wall_s": round(bench_wall, 1),
         "duckdb_wall_s": round(duck_wall, 1),
         "loadavg_before_bench": load0,
         "loadavg_between": load1,
         "loadavg_after": load2,
         "spark_queries": bench["queries"],
-        "duckdb_queries": duck["queries"],
+        "duckdb_queries": duck_q,
     }
     with open(out_path, "w") as f:
         json.dump(pair, f, indent=1)
