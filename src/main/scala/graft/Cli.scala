@@ -40,6 +40,13 @@ object Cli {
   private def settle(spark: SparkSession, dbDir: String): Unit =
     Seq("contract", "function").foreach(t => Sink.settle(spark, s"$dbDir/$t"))
 
+  /** The two tables as stored, empty if never written (see [[Sink.readTable]]). */
+  private def contracts(spark: SparkSession, dbDir: String) =
+    Sink.readTable(spark, s"$dbDir/contract", graft.model.Schemas.contractSchema)
+  private def functions(spark: SparkSession, dbDir: String) =
+    Sink.readTable(spark, s"$dbDir/function",
+      org.apache.spark.sql.Encoders.product[Derive.FunctionRow].schema)
+
   /** `path (N files, K KB)`: the table's data files after a call. */
   private def table(spark: SparkSession, path: String): String = {
     val (files, bytes) = Sink.tableFiles(spark, path)
@@ -54,8 +61,7 @@ object Cli {
 
     case "index-functions" :: dbDir :: Nil =>
       settle(spark, dbDir)
-      val contracts = spark.read.parquet(s"$dbDir/contract")
-      val n = Sink.upsertAppend(Derive.functions(contracts).toDF(),
+      val n = Sink.upsertAppend(Derive.functions(contracts(spark, dbDir)).toDF(),
         s"$dbDir/function", "id")
       println(s"[graft] index-functions: $n new function rows -> ${table(spark, s"$dbDir/function")}")
       0
@@ -63,7 +69,7 @@ object Cli {
     case "export-source" :: dbDir :: id :: out :: Nil =>
       settle(spark, dbDir)
       // point lookup straight off the contract table (S6), then S11 export
-      val written = Export.exportFrom(spark.read.parquet(s"$dbDir/contract"), id, out)
+      val written = Export.exportFrom(contracts(spark, dbDir), id, out)
       if (written.isEmpty) {
         // the reference fails loudly here ("Contract not found", main.rs:162-165)
         System.err.println(s"[graft] export-source: contract not found: $id")
@@ -76,9 +82,7 @@ object Cli {
     case "validate" :: dbDir :: Nil =>
       settle(spark, dbDir)
       // S12/P2/J1 constraint checks over the built tables
-      val v = graft.model.Schemas.validate(
-        spark.read.parquet(s"$dbDir/contract"),
-        spark.read.parquet(s"$dbDir/function"))
+      val v = graft.model.Schemas.validate(contracts(spark, dbDir), functions(spark, dbDir))
       v.toSeq.sortBy(_._1).foreach { case (check, n) =>
         println(s"[graft] validate: $check violations=$n")
       }
@@ -322,7 +326,7 @@ object Cli {
       // RESTORE any pre-existing seam value, don't blindly unset: a
       // session that pinned its own index must get it back after the
       // command (unsetting would silently flip later queries in the
-      // same session to the env/kernel path mid-session)
+      // same session to the session-kernel path mid-session)
       val prior = spark.conf.getOption("spark.graft.fpIndex")
       val priorVec = spark.conf.getOption("spark.graft.vecIndex")
       spark.conf.set("spark.graft.fpIndex", idxDir)

@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
   * Usage: `runMain graft.ScaleCheck [srcDir] [outDir] [factor] [passes]`
   * — generates outDir once (skipped if present), then prints one JSON
   * line with per-query min-of-N seconds at both scales and the slope.
-  * Session posture mirrors Bench (AQE off, hash-join preference,
-  * shuffle.partitions = cores) so the numbers compose with BENCH_r*.
+  * Session posture: AQE off and hash-join preference, as in Bench;
+  * shuffle.partitions derived per corpus and query class by
+  * [[graft.util.Tuning]].
   */
 object ScaleCheck {
 
@@ -318,19 +319,14 @@ object ScaleCheck {
     // (spilling) vs the 26.6 s pair-linear floor at 512. The default is
     // now DERIVED from the measured corpus's bytes (graft.util.Tuning;
     // both scales get their own derived count via a runtime re-set at
-    // the timing boundary below). SPARK_GRAFT_SHUFFLE pins a fixed
-    // count for A/B runs; SPARK_GRAFT_AQE=true for the AQE posture.
-    val fixedShuffle = sys.env.get("SPARK_GRAFT_SHUFFLE")
-    def partitionsFor(dir: String): String =
-      fixedShuffle.getOrElse(
-        graft.util.Tuning.shufflePartitions(dir, cpus.toInt).toString)
+    // the timing boundary below).
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", partitionsFor(srcDir))
+      .config("spark.sql.shuffle.partitions",
+        graft.util.Tuning.shufflePartitions(srcDir, cpus.toInt).toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
+      .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -363,14 +359,12 @@ object ScaleCheck {
     // per-QUERY partition class (r13): the pair-expansion class takes
     // the tier's derived count, narrow composites the cores floor — the
     // measured two-class posture (BASELINE.md r12: q31 needs 544 at
-    // sf10 or it spills; q108 at 544 pays 3× in waves). A hand-set
-    // SPARK_GRAFT_SHUFFLE still pins everything for A/B runs. Note the
+    // sf10 or it spills; q108 at 544 pays 3× in waves). Note the
     // shared-kernel interplay: a kernel is cached at its BUILDER's
     // count, so subset composition still matters for marginal numbers
     // (the scale_audit.sh discipline).
     def partitionsForQuery(q: graft.queries.Q, dir: String): String =
-      fixedShuffle.getOrElse(graft.util.Tuning.queryPartitions(
-        q.pairExpansion, dir, cpus.toInt).toString)
+      graft.util.Tuning.queryPartitions(q.pairExpansion, dir, cpus.toInt).toString
     def run(q: graft.queries.Q, dir: String): Unit = {
       spark.conf.set("spark.sql.shuffle.partitions", partitionsForQuery(q, dir))
       graft.util.Caches.clearTransient()
@@ -378,8 +372,8 @@ object ScaleCheck {
     }
     def time(dir: String): Seq[(String, Double)] = {
       System.err.println(s"[scale] $dir: shuffle.partitions per class: " +
-        s"pair=${partitionsFor(dir)} narrow=${cpus.toInt}" +
-        fixedShuffle.fold("")(f => s" (pinned $f)"))
+        s"pair=${graft.util.Tuning.shufflePartitions(dir, cpus.toInt)} " +
+        s"narrow=${cpus.toInt}")
       spark.sqlContext.clearCache()
       qs.foreach(run(_, dir)) // warmup: JIT, codegen, parquet footers
       val timed = (1 to passes).map { _ =>

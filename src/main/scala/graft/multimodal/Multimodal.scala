@@ -289,7 +289,8 @@ object Multimodal {
     * documented 1e9-doc escape is trading radius for keyspace — e.g.
     * 4×30 bits halves the guaranteed radius to 3 while cutting the
     * uniform floor 64×/band — or partitioning the corpus by the
-    * SIZE-CLASS component below. Changing either constant changes the
+    * SIZE-CLASS component below (at a tail recall cost; see
+    * [[SizeClassSlack]]). Changing either constant changes the
     * persisted index layout AND the hand-mirrored oracle CTEs
     * (AuditOps.mediaPairCtes, q129's inline CASE): rebuild indexes with
     * writeFingerprints and re-pin the oracles together.
@@ -339,59 +340,24 @@ object Multimodal {
       s"(${bandKeyOf(a0, a1, k)}) = (${bandKeyOf(b0, b1, k)})")
       .mkString(" OR ")
 
-  /** The SIZE-CLASS band-key component (r16, staged — default OFF, no
-    * behavior change at current scale): partitioning the band join by
-    * floor(log2(n_bytes)) divides every bucket's occupancy by the
-    * corpus's size-class spread, attacking the uniform candidate floor
-    * directly — near-dup payloads at hamming ≤ MediaBands−1 are
-    * near-identical byte streams whose length delta is bounded by the
-    * edit-bound arithmetic (a contiguous k-byte insert flips up to
-    * 2(k+5) parities, so a ≤4-bit pair's |Δn| is single-digit bytes).
-    * To stay EXHAUSTIVE across a power-of-2 boundary each side emits
-    * the classes of BOTH n and n + [[SizeClassSlack]] (≤ 2 distinct —
-    * an 8-byte span straddles at most one boundary for n ≥ 8, and
-    * FingerprintMinBytes = 125 ≫ 8): for any pair with
-    * na ≤ nb ≤ na + Slack, cls(nb) ∈ {cls(na), cls(na+Slack)}, so the
-    * join on the exploded class matches; the existing candidate
-    * distinct() absorbs the ≤2× emission. Measured on/off in
-    * BASELINE.md r16 — at the current corpus the verified
-    * pair set is IDENTICAL with the knob on.
+  /** The SIZE-CLASS band-key component, measured but not joined on:
+    * partitioning the band join by floor(log2(n_bytes)) would divide
+    * every bucket's occupancy by the corpus's size-class spread. q131
+    * reports that posture's collision volume (`candidate_pairs_sized`)
+    * beside the plain banding's, so the trade can be read off the
+    * datasheet. Each side emits the classes of BOTH n and
+    * n + [[SizeClassSlack]] (≤ 2 distinct — an 8-byte span straddles at
+    * most one boundary for n ≥ 8, and FingerprintMinBytes = 125 ≫ 8):
+    * for any pair with na ≤ nb ≤ na + Slack,
+    * cls(nb) ∈ {cls(na), cls(na+Slack)}. The sized join is NOT
+    * exhaustive for hamming ≤ 4 at larger |Δn|: parity cancellation on
+    * low-entropy payloads can hold hamming ≤ 4 at arbitrary length
+    * deltas (a run of one repeated byte keeps hamming at 0 for any two
+    * lengths of equal parity; MultimodalSpec pins a 20-byte-Δn pair
+    * whose classes do not meet). That recall loss is why every media
+    * pair join bands on (bk, bkey) alone.
     */
   val SizeClassSlack = 8
-
-  /** THE production knob (r17 — the staged r16 A/B turned on-able):
-    * `spark.graft.mediaSizeClasses=true` makes the media pair/probe
-    * band joins additionally key on the exploded size class. Requires
-    * an index whose `media` table carries `n_bytes` (the r17 schema —
-    * [[graft.sink.Sink.writeFingerprints]] persists it); a legacy
-    * fp-only media table degrades LOUDLY to plain banding.
-    *
-    * RECALL CAVEAT, stated precisely (r18 — the r17 "cost knob, never
-    * a correctness knob" claim was too strong): the exhaustiveness
-    * argument covers pairs with |Δn| ≤ [[SizeClassSlack]] bytes. The
-    * edit-bound arithmetic (a contiguous k-byte insert flips UP TO
-    * 2(k+5) parity bits) makes single-digit |Δn| the TYPICAL hamming≤4
-    * near-dup, but it is an upper bound, not a lower bound: parity
-    * CANCELLATION on low-entropy payloads can hold hamming ≤ 4 at
-    * arbitrary length deltas (the degenerate case — a run of one
-    * repeated byte — keeps hamming at 0 for ANY two lengths of equal
-    * parity; MultimodalSpec pins a constructed 20-byte-Δn pair the
-    * sized join drops). With the flag ON such a pair whose classes
-    * straddle a power-of-2 boundary by more than the slack silently
-    * leaves q125/probe verdicts — a TAIL recall loss, bounded to
-    * low-entropy payloads with |Δn| > 8, in exchange for the measured
-    * −32% candidate volume. That trade is why the flag defaults OFF
-    * and why enabling it at the 1e9-doc tier is a decision to read off
-    * q131's datasheet WITH this caveat, not a free win. On THIS corpus
-    * the verified pair set is identical on/off (measured at two scales
-    * in BASELINE.md r16/r17 and value-pinned in the suite) — the
-    * caveat is about what the corpus could contain, not what it does.
-    */
-  val SizeClassFlag = "spark.graft.mediaSizeClasses"
-
-  /** Is the size-class band knob on for this session? */
-  def sizeClassesOn(s: org.apache.spark.sql.SparkSession): Boolean =
-    s.conf.getOption(SizeClassFlag).contains("true")
 
   /** The ≤ 2 size classes a payload of `n` bytes participates in (see
     * [[SizeClassSlack]]): array(floor(log2 n), floor(log2 (n+slack))),

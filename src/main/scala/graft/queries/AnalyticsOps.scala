@@ -88,12 +88,11 @@ object AnalyticsOps {
       // Lineage cadence: each round's plan nests the previous round's —
       // persistence caches the DATA but not the DAG, so planning/closure
       // cost and the lost-partition recompute path grow linearly with
-      // rounds. Every N rounds (default 8 — large-diameter graphs only;
-      // near-dup components converge in 2–3) localCheckpoint truncates
-      // the lineage to the materialized blocks, bounding per-round cost
-      // at billions of edges.
-      val ckptEvery = s.conf.getOption("spark.graft.cc.checkpointEvery")
-        .map(_.toInt).getOrElse(8).max(1)
+      // rounds. Every 8 rounds (large-diameter graphs only; near-dup
+      // components converge in 2–3) localCheckpoint truncates the
+      // lineage to the materialized blocks, bounding per-round cost at
+      // billions of edges.
+      val ckptEvery = 8
       // unpersist must target the PERSISTED references: from round 2 on,
       // `labels` is an unpersisted projection over the previous round's
       // `updated`, so labels.unpersist() would be a silent no-op and every

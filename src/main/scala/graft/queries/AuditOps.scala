@@ -352,36 +352,18 @@ object AuditOps {
     * one `weak`: 2.85e8 candidates at sf10, quadratic by construction).
     */
   private def mediaPairs(s: SparkSession, d: String): DataFrame = {
-    // the r17 size-class knob: when on, the band join additionally keys
-    // on the exploded size class (≤ 2 classes per doc — the ±slack
-    // emission keeps the ≤ 4-hamming contract exhaustive; Multimodal
-    // .sizeClassesOf). A COST knob only: the verified pair set is
-    // identical on/off (measured at two scales, BASELINE.md r16/r17;
-    // value-pinned in AuditSpec); the candidate distinct absorbs the
-    // ≤ 2× emission. Cache-keyed separately so a session toggling the
-    // flag never serves the other posture's kernel.
-    val scOn = graft.multimodal.Multimodal.sizeClassesOn(s)
-    graft.util.Caches.sharedIndex(s,
-      s"mediaPairs:$d${TrainingOps.fpIndexDir(s).fold("")(x => s"@idx=$x")}" +
-        (if (scOn) "@scls" else "")) {
+    graft.util.Caches.sharedIndex(s, s"mediaPairs:$d" + TrainingOps.fpKey(s)) {
       val fps = graft.util.Caches.transientPersist(
         TrainingOps.mediaFps(s, d))
-      def withBands(df: DataFrame): DataFrame = df
+      val bands = fps.select(col("doc_id"), col("fp0"), col("fp1"))
         .withColumn("bk", explode(sequence(lit(0),
           lit(graft.multimodal.Multimodal.MediaBands - 1))))
         .withColumn("bkey",
           expr(graft.multimodal.Multimodal.bandKeySql("fp0", "fp1")))
-      val bands = withBands(
-        if (scOn) fps.select(col("doc_id"), col("fp0"), col("fp1"),
-          explode(graft.multimodal.Multimodal.sizeClassesOf(col("n_bytes")))
-            .as("scls"))
-        else fps.select(col("doc_id"), col("fp0"), col("fp1")))
       val joinCond = col("a.bk") === col("b.bk") &&
         col("a.bkey") === col("b.bkey") &&
         col("a.doc_id") < col("b.doc_id")
-      bands.as("a").join(bands.hint("shuffle_hash").as("b"),
-          if (scOn) joinCond && col("a.scls") === col("b.scls")
-          else joinCond)
+      bands.as("a").join(bands.hint("shuffle_hash").as("b"), joinCond)
         .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"),
           col("a.fp0").as("fpa0"), col("a.fp1").as("fpa1"),
           col("b.fp0").as("fpb0"), col("b.fp1").as("fpb1"))
@@ -407,11 +389,9 @@ object AuditOps {
     // r18 kernel promotion (BASELINE.md r18 OPTIMIZATION phase): two
     // consumers (q127 and q123's media column) each re-ran the filter + best-partner window
     // + spine join over the cached mediaPairs kernel. Batch-sized
-    // narrow frame; key mirrors mediaPairs' (seam dir + size-class
-    // flag) so postures can never serve each other.
-    graft.util.Caches.sharedIndex(s,
-      s"mediaVerdicts:$d${TrainingOps.fpIndexDir(s).fold("")(x => s"@idx=$x")}" +
-        (if (graft.multimodal.Multimodal.sizeClassesOn(s)) "@scls" else ""))(
+    // narrow frame; key mirrors mediaPairs' seam dir so postures can
+    // never serve each other.
+    graft.util.Caches.sharedIndex(s, s"mediaVerdicts:$d" + TrainingOps.fpKey(s))(
       mediaVerdictsBuild(s, d))
 
   private def mediaVerdictsBuild(s: SparkSession, d: String): DataFrame = {
@@ -2199,8 +2179,8 @@ object AuditOps {
             expr(graft.multimodal.Multimodal.bandKeySql("fp0", "fp1")))
         val occ = bands.groupBy("bk", "bkey").agg(count(lit(1)).as("c"))
         // the size-class posture's collision volume, reported BESIDE the
-        // plain one (r17 — the knob decision reads off this page both
-        // ways): the same Σ c·(c−1)/2, over buckets additionally keyed
+        // plain one (r17 — see Multimodal.SizeClassSlack for its recall
+        // cost): the same Σ c·(c−1)/2, over buckets additionally keyed
         // by the exploded size class (n_bytes rides mediaFps from the
         // r17 index schema / the session pass identically)
         val bandsSc = fps.select(col("doc_id"), col("fp0"), col("fp1"),

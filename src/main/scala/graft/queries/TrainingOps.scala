@@ -117,8 +117,8 @@ object TrainingOps {
 
   /** Standing-corpus fingerprint-index seam (r13): a session that names
     * a persisted X76 index ([[graft.sink.Sink.writeFingerprints]]'s
-    * layout) via the `spark.graft.fpIndex` session conf — or
-    * SPARK_GRAFT_FP_INDEX for CLI runs — makes the LSH-family kernels
+    * layout) via the `spark.graft.fpIndex` session conf (`Cli audit
+    * --index` sets it) makes the LSH-family kernels
     * LOAD the index's tables instead of rebuilding the session shingle
     * kernel from text. This is the production posture for "audit a
     * standing corpus": the index is maintained incrementally by the
@@ -132,11 +132,10 @@ object TrainingOps {
     * session-kernel path. The caller owns corpus↔index consistency —
     * naming an index built from a DIFFERENT documents table is the same
     * contract violation as pointing two queries at different corpora.
-    * Conf beats env so a test can scope the seam to one session.
+    * The conf is per session, so a test can scope the seam to one.
     */
   private[graft] def fpIndexDir(s: SparkSession): Option[String] =
     s.conf.getOption("spark.graft.fpIndex").filter(_.nonEmpty)
-      .orElse(sys.env.get("SPARK_GRAFT_FP_INDEX").filter(_.nonEmpty))
 
   /** [[fpIndexDir]] restricted to indexes carrying the r14 STATS tier
     * (dfc/bkc/xc/dsh — [[graft.sink.Sink]]'s pre-aggregated count
@@ -176,14 +175,13 @@ object TrainingOps {
     fpIndexDir(s).fold("")(dir => s"@idx=$dir")
 
   /** The semantic tier's standing-corpus seam (X103, the X97 analog):
-    * `spark.graft.vecIndex` / SPARK_GRAFT_VEC_INDEX names a persisted
+    * the `spark.graft.vecIndex` session conf names a persisted
     * [[graft.sink.Sink.writeVectorIndex]] index (the STANDING corpus's
     * quantized vectors, cell-partitioned); q118's incremental probe
     * rides it instead of rebuilding the in-session pair kernel.
     */
   private[graft] def vecIndexDir(s: SparkSession): Option[String] =
     s.conf.getOption("spark.graft.vecIndex").filter(_.nonEmpty)
-      .orElse(sys.env.get("SPARK_GRAFT_VEC_INDEX").filter(_.nonEmpty))
 
   /** (doc_id, h1) hashed-shingle postings — the projection every
     * set-measure kernel joins on. Session kernel by default; with the
@@ -295,8 +293,8 @@ object TrainingOps {
       val base = new org.apache.hadoop.fs.Path(s"$dir/media/batch=base")
       base.getFileSystem(s.sessionState.newHadoopConf()).exists(base)
     }.filter { dir =>
-      // current schema = the two packed longs + n_bytes (r17 — the
-      // size-class knob and q131's candidate_pairs_sized row read it);
+      // current schema = the two packed longs + n_bytes (r17 — q131's
+      // candidate_pairs_sized row reads it);
       // both legacy generations degrade the same loud way
       val cols = s.read.parquet(s"$dir/media").columns
       val current = cols.contains("fp0") && cols.contains("n_bytes")

@@ -1,7 +1,7 @@
 package graft.sink
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, row_number, when}
 import org.apache.spark.sql.types.StructType
 
@@ -99,12 +99,14 @@ object Sink {
     val spark = batch.sparkSession
     settle(spark, path)
     // the key column alone, its type pinned from the batch, so no
-    // schema-inference job runs. Try, not an exists() check: a missing
-    // sink dir must count as fresh, and a dir that exists but holds no
-    // parquet (failed first write, pre-created dir) reads as no keys —
-    // an unreadable existing sink would otherwise wedge every rerun
-    val existingKeys = scala.util.Try(
-      spark.read.schema(StructType(Seq(batch.schema(key)))).parquet(path)).toOption
+    // schema-inference job runs. A missing sink dir counts as fresh. The
+    // Try stays for a dir that exists but holds no parquet (failed first
+    // write, pre-created dir): it reads as no keys, where an unreadable
+    // existing sink would otherwise wedge every rerun
+    val existingKeys =
+      if (!tableExists(spark, path)) None
+      else scala.util.Try(
+        spark.read.schema(StructType(Seq(batch.schema(key)))).parquet(path)).toOption
     val n = appendFresh(batch, existingKeys, key, rightSized(_).write
       .mode(SaveMode.Append).option("compression", "zstd").parquet(path))
     if (n > 0) fold(spark, path, batch.schema)
@@ -159,6 +161,22 @@ object Sink {
       (files.size, files.map(_.getLen).sum)
     }
   }
+
+  /** Has anything ever been written to the table at `path`? An upsert
+    * with no fresh row writes nothing, so a table may never appear. */
+  private def tableExists(spark: SparkSession, path: String): Boolean = {
+    val table = new Path(path)
+    table.getFileSystem(spark.sessionState.newHadoopConf()).exists(table)
+  }
+
+  /** The table at `path`, or an empty frame of `schema` if it was never
+    * written: the reference creates both tables at startup
+    * (`db.rs:59-88`), so a verb that reads one before any row landed in
+    * it sees it empty rather than failing on a missing path.
+    */
+  def readTable(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    if (tableExists(spark, path)) spark.read.parquet(path)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** Rewrite the table's [[foldSet]] as one zstd file, read with
     * `schema` pinned so no inference job runs, and swap it in staged:
@@ -833,10 +851,8 @@ object Sink {
     // [[probeMediaNearDup]] buckets and verifies identically to the
     // audit query. Payloads below the skip-gram floor are absent (the
     // q125 convention — probes read them as 'fresh'). `n_bytes` is the
-    // payload's byte length — the r17 schema column the size-class band
-    // knob ([[graft.multimodal.Multimodal.SizeClassFlag]]) keys on; a
-    // pre-r17 fp-only media table degrades loudly wherever the knob is
-    // asked for.
+    // payload's byte length, which q131's size-class datasheet row reads
+    // through the seam-aware media fingerprints.
     shapeFor("media")(docs
       .filter(col("text").isNotNull && org.apache.spark.sql.functions
         .length(col("text"))
@@ -1595,53 +1611,29 @@ object Sink {
     if (!idx0.columns.contains("fp0"))
       sys.error(s"$path/media has the legacy 60-bit single-long schema; " +
         "rebuild the index with writeFingerprints")
-    // the r17 size-class knob (Multimodal.SizeClassFlag): honored only
-    // when the index carries n_bytes — a pre-r17 fp-only media table
-    // DEGRADES LOUDLY to plain banding (the flag is a cost knob, never
-    // a correctness knob: verified verdicts are identical either way,
-    // value-pinned in SinkSpec)
-    val scOn = graft.multimodal.Multimodal.sizeClassesOn(spark) && {
-      val has = idx0.columns.contains("n_bytes")
-      if (!has)
-        System.err.println(s"[sink] NOTE: ${graft.multimodal.Multimodal
-          .SizeClassFlag} is set but $path/media has no n_bytes column " +
-          "(pre-r17 schema) — probing with plain banding; rebuild with " +
-          "writeFingerprints to enable size-class banding")
-      has
-    }
-    val b0 = batch
+    val b = batch
       .filter(col("text").isNotNull && length(col("text")) >= minB)
       .select(col("doc_id"),
-        length(col("text").cast("binary")).cast("long").as("n_bytes"),
         graft.multimodal.Multimodal
           .fingerprint(col("text").cast("binary")).as("f"))
-      .select(col("doc_id"), col("n_bytes"),
+      .select(col("doc_id"),
         col("f").getField("_1").as("fp0"),
         col("f").getField("_2").as("fp1"))
-    val b = if (scOn) b0 else b0.drop("n_bytes")
     val idx1 = minusTombstones(
       excludeBatch.fold(idx0)(tag => idx0.filter(col("batch") =!= tag)),
       path, "doc_id")
-    val standing = idx1.select(Seq(col("doc_id").as("near_of"),
-        col("fp0").as("fpi0"), col("fp1").as("fpi1")) ++
-        (if (scOn) Seq(col("n_bytes")) else Nil): _*)
+    val standing = idx1.select(col("doc_id").as("near_of"),
+        col("fp0").as("fpi0"), col("fp1").as("fpi1"))
       .join(batch.select(col("doc_id").as("bid")),
         col("near_of") === col("bid"), "left_anti")
-    def banded(df: DataFrame, c0: String, c1: String): DataFrame = {
-      val sized =
-        if (scOn) df.withColumn("scls", explode(graft.multimodal.Multimodal
-          .sizeClassesOf(col("n_bytes")))).drop("n_bytes")
-        else df
-      sized
-        .withColumn("bk", explode(sequence(lit(0), lit(graft.multimodal.Multimodal.MediaBands - 1))))
+    def banded(df: DataFrame, c0: String, c1: String): DataFrame =
+      df.withColumn("bk", explode(sequence(lit(0), lit(graft.multimodal.Multimodal.MediaBands - 1))))
         .withColumn("bkey",
           expr(graft.multimodal.Multimodal.bandKeySql(c0, c1)))
-    }
-    val joinKeys = Seq("bk", "bkey") ++ (if (scOn) Seq("scls") else Nil)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
       .orderBy(col("hamming"), col("near_of"))
     val near = banded(b, "fp0", "fp1")
-      .join(banded(standing, "fpi0", "fpi1"), joinKeys)
+      .join(banded(standing, "fpi0", "fpi1"), Seq("bk", "bkey"))
       .select(col("doc_id"), col("near_of"),
         expr(graft.multimodal.Multimodal
           .hammingSql("fp0", "fp1", "fpi0", "fpi1")).cast("int").as("hamming"))

@@ -115,13 +115,9 @@ object Caches {
   def invalidateShared(dir: String): Unit = shared.synchronized {
     import scala.jdk.CollectionConverters._
     val tags = Seq(s"@idx=$dir", s"@vidx=$dir")
-    // the dir must be the WHOLE seam value: a tag match must end the key
-    // or abut the next @-flag ("…@idx=/a/idx@scls"), else invalidating
-    // /a/idx would also hit /a/idx2 (prefix collision)
-    def hit(k: String): Boolean = tags.exists { t =>
-      val i = k.indexOf(t)
-      i >= 0 && { val j = i + t.length; j == k.length || k.charAt(j) == '@' }
-    }
+    // the seam tag always ends the key, so matching the key's END keeps
+    // invalidating /a/idx from also hitting /a/idx2 (prefix collision)
+    def hit(k: String): Boolean = tags.exists(k.endsWith)
     shared.values.asScala.foreach { m =>
       m.keys.filter(hit).foreach { k =>
         m.remove(k).flatMap(r => Option(r.get))

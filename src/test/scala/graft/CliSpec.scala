@@ -262,6 +262,30 @@ class CliSpec extends AnyFunSuite {
     assert(!Files.exists(table.resolve("_fold")))
   }
 
+  test("tables never written read empty: a vyper-only DB validates, export misses") {
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory("graft-cli-vyper")
+    Files.createDirectories(root.resolve("Vault_0"))
+    Files.writeString(root.resolve("Vault_0/metadata.json"),
+      """{"ContractName": "Vault", "CompilerVersion": "0.3.10", """ +
+        """"Runs": 200, "OptimizationUsed": true, "BytecodeHash": "0x04"}""")
+    Files.writeString(root.resolve("Vault_0/main.vy"),
+      "@external\ndef deposit(amount: uint256):\n    pass\n")
+    val db = Files.createTempDirectory("graft-cli-vdb").toString
+    assert(Cli.run(spark, List("pre-process", root.toString, db)) == 0)
+    assert(spark.read.parquet(s"$db/contract").count() == 1)
+    // the language gate derives no function row from a vyper contract,
+    // so the function table is never written
+    assert(Cli.run(spark, List("index-functions", db)) == 0)
+    assert(!Files.exists(Path.of(db, "function")))
+    assert(Cli.run(spark, List("validate", db)) == 0)
+    // a DB no verb has written to: no contract table at all
+    val empty = Files.createTempDirectory("graft-cli-empty").toString
+    assert(Cli.run(spark, List("index-functions", empty)) == 0)
+    val out = Files.createTempDirectory("graft-cli-export-empty")
+    assert(Cli.run(spark, List("export-source", empty, "no-such-id", out.toString)) == 1)
+  }
+
   test("unknown command exits 2") {
     assert(Cli.run(spark, List("frobnicate")) == 2)
   }

@@ -114,7 +114,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("size-class knob recall caveat: a constructed low-entropy >slack-Δn near-dup pair is dropped by sized banding (the documented tail)") {
     import org.apache.spark.sql.functions.{col, lit}
-    // the degenerate payload the SizeClassFlag doc names: a run of one
+    // the degenerate payload the SizeClassSlack doc names: a run of one
     // repeated byte puts every 6-byte window in ONE parity bucket, so
     // any two lengths of equal parity fingerprint IDENTICALLY (hamming
     // 0 — a true near-dup by the verify contract) at arbitrary Δn. 240
@@ -128,8 +128,9 @@ class MultimodalSpec extends AnyFunSuite {
       "the constructed pair must be a fingerprint-identical near-dup")
     // plain banding surfaces it (identical fingerprints share all bands)
     // …but the slack-widened size classes are DISJOINT, so the sized
-    // band join never forms the candidate: the recall loss the flag's
-    // doc states, pinned here so the caveat can't silently rot
+    // band join never forms the candidate: the recall loss that keeps
+    // every media pair join on plain banding, pinned here so the
+    // caveat can't silently rot
     def classes(n: Int): Set[Long] =
       spark.range(1).select(Multimodal.sizeClassesOf(lit(n)).as("c"))
         .head.getSeq[Long](0).toSet

@@ -21,12 +21,12 @@ class SettingsBudgetSpec extends AnyFunSuite {
     } finally files.close()
   }
 
-  test("src/main reads at most 8 SPARK_GRAFT_* names and 7 spark.graft.* confs") {
+  test("src/main reads at most 4 SPARK_GRAFT_* names and 5 spark.graft.* confs") {
     val env = namesMatching("SPARK_GRAFT_[A-Z_]+".r)
-    assert(env.size <= 8,
+    assert(env.size <= 4,
       s"${env.size} SPARK_GRAFT_* names: ${env.toSeq.sorted.mkString(", ")}")
     val confs = namesMatching("""spark\.graft\.[A-Za-z]+(\.[A-Za-z]+)*""".r)
-    assert(confs.size <= 7,
+    assert(confs.size <= 5,
       s"${confs.size} spark.graft.* confs: ${confs.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -833,46 +833,32 @@ class SinkSpec extends AnyFunSuite {
     assert(dirs.count(_.startsWith("batch=")) == 1 && dirs.contains("batch=base"))
   }
 
-  test("media size-class knob: probe and q125 kernel value-identical on/off; pre-r17 index degrades to plain banding") {
+  test("a media table without `n_bytes` probes identically") {
     import org.apache.spark.sql.functions.col
-    val flag = graft.multimodal.Multimodal.SizeClassFlag
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.01")
       .select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("graft-scls").toString + "/idx"
+    val dir = Files.createTempDirectory("graft-media").toString + "/idx"
     Sink.writeFingerprints(docs.filter(col("doc_id") % 10 =!= 0), dir)
     assert(spark.read.parquet(s"$dir/media").columns.contains("n_bytes"),
       "r17 media schema must persist n_bytes")
     val batch = docs.filter(col("doc_id") % 10 === 0)
-    def probe() = Sink.probeMediaNearDup(batch, dir)
+    def probe(idx: String) = Sink.probeMediaNearDup(batch, idx)
       .orderBy("doc_id").collect().map(_.toString).toSeq
-    def q125() = SparkEntry.queries("q125_media_neardup")(
-      spark, "/root/testdata/sf0.01").collect().map(_.toString).toSeq
-    val (probeOff, q125Off) = (probe(), q125())
-    assert(q125Off.nonEmpty, "fixture must have media pairs or the pin is vacuous")
-    spark.conf.set(flag, "true")
-    try {
-      assert(probe() == probeOff, "size-class probe verdicts diverged")
-      assert(q125() == q125Off, "size-class q125 pairs diverged")
-      // a pre-r17 index (no n_bytes): the probe degrades LOUDLY to
-      // plain banding — same verdicts, never an error
-      val legacy = spark.read.parquet(s"$dir/media")
-        .drop("n_bytes").collect()
-      val dir2 = Files.createTempDirectory("graft-scls2").toString + "/idx"
-      Sink.writeFingerprints(docs.filter(col("doc_id") % 10 =!= 0), dir2)
-      val mediaDir = s"$dir2/media"
-      import spark.implicits._
-      val legacyDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(legacy.toSeq),
-        spark.read.parquet(s"$dir/media").drop("n_bytes").schema)
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-        spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(mediaDir), true)
-      legacyDf.write.parquet(s"$mediaDir/batch=base")
-      val probeLegacy = Sink.probeMediaNearDup(
-        batch, dir2).orderBy("doc_id").collect().map(_.toString).toSeq
-      assert(probeLegacy == probeOff,
-        "legacy-schema probe must degrade to plain banding, value-identical")
-    } finally { spark.conf.unset(flag); () }
+    val current = probe(dir)
+    assert(current.exists(_.contains("near")),
+      "fixture must have media near-dups or the pin is vacuous")
+    // a pre-r17 index: the same media rows without the n_bytes column
+    val dir2 = Files.createTempDirectory("graft-media2").toString + "/idx"
+    Sink.writeFingerprints(docs.filter(col("doc_id") % 10 =!= 0), dir2)
+    val legacy = spark.read.parquet(s"$dir/media").drop("n_bytes")
+    val rows = legacy.collect().toSeq
+    val legacyDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows), legacy.schema)
+    org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
+      .delete(new org.apache.hadoop.fs.Path(s"$dir2/media"), true)
+    legacyDf.write.parquet(s"$dir2/media/batch=base")
+    assert(probe(dir2) == current,
+      "a media table without n_bytes must probe value-identically")
   }
 
   test("takedown tombstones (X116): probes serve the post-delete truth, folds are physical, rebuild re-asserts") {

@@ -7,7 +7,8 @@ class TuningSpec extends AnyFunSuite {
 
   test("bench posture is unchanged at small scale: sf dirs stay at the cores floor") {
     // the derived default must reproduce the historical 32-partition
-    // posture at every driver-run scale, or BENCH_r* stops composing
+    // posture at every driver-run scale, so timings taken at these
+    // scales stay comparable across changes to the derivation
     for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1"))
       assert(Tuning.shufflePartitions(d, 32) == 32, d)

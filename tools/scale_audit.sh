@@ -13,8 +13,8 @@
 #    once, not plan cost.
 #  - HEAP pinned like the r11 runs: 48g at sf1, 64g at sf10 (default
 #    ~32g thrashes at sf10).
-#  - shuffle partitions are DERIVED from the corpus (graft.util.Tuning)
-#    unless SPARK_GRAFT_SHUFFLE pins them for an A/B.
+#  - shuffle partitions are DERIVED from the corpus (graft.util.Tuning),
+#    per scale and per query class; AQE stays off.
 #  - quiet window: never run sbt/tests concurrently; check loadavg
 #    before trusting a number.
 #
