@@ -44,8 +44,7 @@ object Cli {
   private def contracts(spark: SparkSession, dbDir: String) =
     Sink.readTable(spark, s"$dbDir/contract", graft.model.Schemas.contractSchema)
   private def functions(spark: SparkSession, dbDir: String) =
-    Sink.readTable(spark, s"$dbDir/function",
-      org.apache.spark.sql.Encoders.product[Derive.FunctionRow].schema)
+    Sink.readTable(spark, s"$dbDir/function", graft.model.Schemas.functionSchema)
 
   /** `path (N files, K KB)`: the table's data files after a call. */
   private def table(spark: SparkSession, path: String): String = {
@@ -127,9 +126,9 @@ object Cli {
 
     case "fingerprint" :: sfDir :: idxDir :: Nil =>
       // X76/X91: (re)build the standing corpus's persisted fingerprint
-      // index — the artifact `audit` below and the streaming dedup flow
-      // both probe/ride; maintained incrementally by the sink
-      // (appendFingerprints + compactFingerprints) between rebuilds
+      // index — the artifact `audit` below probes; the sink can maintain
+      // it incrementally (appendFingerprints + compactFingerprints)
+      // between rebuilds
       import org.apache.spark.sql.functions.col
       Sink.writeFingerprints(
         graft.util.Tables.documents(spark, sfDir)
@@ -141,9 +140,9 @@ object Cli {
       // X103: (re)build the corpus's persisted VECTOR index — the
       // semantic tier's standing state: the cellPairCos seam
       // (`spark.graft.vecIndex`) rides its pairs table from
-      // q115/q116/q118 (and every other pair consumer), the streaming
-      // semantic dedup flow maintains it (appendVectorIndex /
-      // compactVectorIndex) between rebuilds. Built from the FULL
+      // q115/q116/q118 (and every other pair consumer); the sink can
+      // maintain it (appendVectorIndex / compactVectorIndex) between
+      // rebuilds. Built from the FULL
       // corpus (r14 — the `fingerprint` command's convention: the
       // index IS the corpus artifact; split conventions like q118's
       // %10 batch are applied by the consumers, not baked into the

@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,24 +36,11 @@ object Schemas {
     StructField("source_type", StringType, nullable = false),
     StructField("files", ArrayType(sourceFileType))))
 
-  /** `function` (`db.rs:74-84`): 8 string columns. */
-  val functionSchema: StructType = StructType(
-    Seq("id", "contract_id", "contract_name", "function_name",
-      "filename", "signature", "selector", "source_code")
-      .map(StructField(_, StringType)))
-
-  /** Oracle-side DDL (what the reference executes at startup), kept for
-    * differential tooling that materializes the tables in DuckDB.
+  /** `function` (`db.rs:74-84`) plus the `resolved` flag: the schema
+    * [[graft.contracts.Derive]] writes and every reader reads.
     */
-  val oracleDdl: Seq[String] = Seq(
-    "CREATE TYPE source_type_enum AS ENUM ('json', 'vyper', 'single_sol', 'multi_sol')",
-    "CREATE TABLE IF NOT EXISTS contract (id VARCHAR PRIMARY KEY, name VARCHAR, " +
-      "metadata VARCHAR, source VARCHAR, source_type source_type_enum)",
-    "CREATE TABLE IF NOT EXISTS function (id VARCHAR PRIMARY KEY, contract_id VARCHAR, " +
-      "contract_name VARCHAR, function_name VARCHAR, filename VARCHAR, " +
-      "signature VARCHAR, selector VARCHAR, source_code VARCHAR, " +
-      "FOREIGN KEY (contract_id) REFERENCES contract(id))",
-    "CREATE INDEX IF NOT EXISTS idx_function_composite ON function(contract_id, selector, signature)")
+  val functionSchema: StructType =
+    Encoders.product[graft.contracts.Derive.FunctionRow].schema
 
   /** P2 domain check: rows whose source_type is outside the enum.
     * (The reference panics via `unreachable!`, `db.rs:31`; we surface the

@@ -2084,10 +2084,10 @@ object TrainingOps {
     // the baseline arm constructs the built-in inline): 0.376 → 0.254 s
     // quiet / 0.643 → 0.453 s loaded, results bit-identical; the
     // remaining ~0.4 s bench figure is the exchange+window job
-    // floor, BASELINE.md r11. The built-in stays the STREAMING form
-    // ([[graft.streaming.Streaming.sessionAgg]] — with a watermark it is
-    // the only shape whose state store merges late sessions); batch
-    // picks the cheaper equivalent plan, the engine's usual liberty.
+    // floor, BASELINE.md r11. The built-in is the form a streaming
+    // session aggregation would need (with a watermark it is the only
+    // shape whose state store merges late sessions); batch picks the
+    // cheaper equivalent plan, the engine's usual liberty.
     Q("q40_session_window",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window

@@ -46,31 +46,6 @@ object Sink {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Anti-join `batch` against the keys already in the sink, keep-first
-    * dedup the survivors (see [[dedupKeepFirst]]), then count + append
-    * via `write`. Both steps decide per key, so running the anti-join
-    * first keeps the same rows as deduping first, while the payload
-    * shuffle and sort see only fresh rows. The count-then-write pair
-    * reads the shuffled output once through the cache; an accumulator
-    * would save the pass but complicate a batch-oriented sink for
-    * nothing. `write` receives the persisted frame, already loaded, and
-    * is not called when no row is fresh.
-    */
-  private def appendFresh(batch: DataFrame,
-      existingKeys: Option[DataFrame], key: String,
-      write: DataFrame => Unit): Long = {
-    val unseen = existingKeys match {
-      case Some(existing) => batch.join(existing, Seq(key), "left_anti")
-      case None => batch
-    }
-    val persisted = dedupKeepFirst(unseen, key).persist()
-    try {
-      val n = persisted.count()
-      if (n > 0) write(persisted)
-      n
-    } finally { persisted.unpersist() }
-  }
-
   /** `loaded` (persisted and materialized) coalesced to one partition per
     * `spark.sql.files.maxPartitionBytes` of its cached, in-memory size.
     * That bounds the files written from it by the size the read path
@@ -87,9 +62,14 @@ object Sink {
   }
 
   /** Append `batch` to the parquet table at `path`, dropping rows whose
-    * `key` already exists there and intra-batch duplicates (keep-first,
-    * see [[appendFresh]]). The fresh rows land as right-sized zstd files
-    * (see [[rightSized]]): one file for a batch whose cached size is below
+    * `key` already exists there and intra-batch duplicates: anti-join
+    * against the sink's keys, then keep-first dedup the survivors (see
+    * [[dedupKeepFirst]]). Both steps decide per key, so running the
+    * anti-join first keeps the same rows as deduping first, while the
+    * payload shuffle and sort see only fresh rows. The count-then-write
+    * pair reads the shuffled output once through the cache. The fresh
+    * rows land as right-sized zstd files (see [[rightSized]]): one file
+    * for a batch whose cached size is below
     * `spark.sql.files.maxPartitionBytes`, none when nothing is fresh. A
     * non-empty append is followed by a [[fold]] of the table's small
     * files; every call first [[settle]]s a fold an earlier call left
@@ -107,8 +87,17 @@ object Sink {
       if (!tableExists(spark, path)) None
       else scala.util.Try(
         spark.read.schema(StructType(Seq(batch.schema(key)))).parquet(path)).toOption
-    val n = appendFresh(batch, existingKeys, key, rightSized(_).write
-      .mode(SaveMode.Append).option("compression", "zstd").parquet(path))
+    val unseen = existingKeys match {
+      case Some(existing) => batch.join(existing, Seq(key), "left_anti")
+      case None => batch
+    }
+    val persisted = dedupKeepFirst(unseen, key).persist()
+    val n = try {
+      val fresh = persisted.count()
+      if (fresh > 0) rightSized(persisted).write
+        .mode(SaveMode.Append).option("compression", "zstd").parquet(path)
+      fresh
+    } finally { persisted.unpersist() }
     if (n > 0) fold(spark, path, batch.schema)
     n
   }
@@ -238,30 +227,6 @@ object Sink {
     }
     folded.foreach(n => fs.delete(new Path(table, n), false))
     fs.delete(stage, true)
-  }
-
-  /** S9/S10 over JDBC — the reference's stated sink shape is "DataFrame
-    * ops … write to an embedded database via JDBC" (`db.rs:172-196`
-    * against a DuckDB file): the same keep-first upsert against any JDBC
-    * url. The existing-key probe reads ONLY the key column through the
-    * JDBC source (column pruning pushes into the remote SELECT); a
-    * missing table counts as fresh and Spark's JDBC writer creates it on
-    * first append. Exercised in SinkSpec against Spark's bundled
-    * embedded Derby — the same in-process-database shape as the
-    * reference's DuckDB.
-    */
-  def upsertJdbc(batch: DataFrame, url: String, table: String,
-      key: String): Long = {
-    val spark = batch.sparkSession
-    val props = new java.util.Properties
-    val existingKeys =
-      scala.util.Try(spark.read.jdbc(url, table, props).select(col(key))
-        // JDBC relations are re-queried per action; snapshot the keys so
-        // the anti-join cannot race the append below
-        .persist()).toOption.filter(df => scala.util.Try(df.count()).isSuccess)
-    try appendFresh(batch, existingKeys, key,
-      _.write.mode(SaveMode.Append).jdbc(url, table, props))
-    finally existingKeys.foreach(_.unpersist())
   }
 
   /** Training-shard writer: materializes a q87-style shard layout
@@ -616,7 +581,7 @@ object Sink {
     *     set-aside+rename swaps it into `batch=base` (the old base is
     *     renamed to `.old-base`, never deleted before the new one is
     *     in place), then every OTHER root entry is swept — the aside
-    *     dir, stale `batch=<tag>` partitions of earlier streaming runs
+    *     dir, stale `batch=<tag>` partitions of earlier appends
     *     AND any legacy pre-partition flat files (a pre-r11 index left
     *     part-files at the table root; mixed flat/partitioned layouts
     *     break partition discovery, so the sweep removes them rather
@@ -634,10 +599,10 @@ object Sink {
     *  3. [[compactFingerprints]] folds accumulated batch partitions
     *     into the base with the same staged-swap discipline — the
     *     small-files maintenance step at production cadence. Run it at
-    *     a quiescent point (no in-flight micro-batch between its probe
-    *     and its append); replay AFTER a compaction stays
-    *     admit-exactly-once because the streaming flow's known-ids
-    *     anti-join sees the folded ids in the base.
+    *     a quiescent point (no batch between its probe and its
+    *     append); a replay AFTER a compaction stays admit-exactly-once
+    *     when its admit anti-joins the index's known ids, which include
+    *     the folded ones in the base.
     */
   def writeFingerprints(docs: DataFrame, path: String): Unit = {
     writeFpTables(docs, t => s"$path/.staging/$t")
@@ -650,7 +615,7 @@ object Sink {
   }
 
   /** Fold every `batch=<tag>` partition into `batch=base` — one
-    * compacted file set per table instead of one per micro-batch (the
+    * compacted file set per table instead of one per batch (the
     * small-files failure at production cadence). Reads the index
     * tables themselves (no corpus re-scan, no fingerprint recompute),
     * restores each table's physical layout (exact clustered by `h`,
@@ -808,12 +773,10 @@ object Sink {
 
   /** Add a batch's fingerprints to an existing [[writeFingerprints]]
     * index — the index-maintenance step after a [[probeFingerprints]]
-    * pass admits its fresh documents (the streaming flow's state write,
-    * [[graft.streaming.Streaming.incrementalDedup]]). Same tables, same
-    * conventions. Each batch owns its `batch=<tag>` partition directory
-    * and the write OVERWRITES that partition, so a replayed batch (the
-    * at-least-once foreachBatch case) replaces its own prior
-    * contribution instead of duplicating rows — duplicated postings
+    * pass admits its fresh documents. Same tables, same conventions.
+    * Each batch owns its `batch=<tag>` partition directory and the
+    * write OVERWRITES that partition, so a replayed batch replaces its
+    * own prior contribution instead of duplicating rows — duplicated postings
     * would silently double every future probe's intersection counts.
     */
   def appendFingerprints(docs: DataFrame, path: String, batch: String): Unit = {
@@ -958,7 +921,7 @@ object Sink {
   //    not against a running fold, same reason. Production sequencing:
   //    one maintenance writer at a quiescent point, the same rule the
   //    lifecycle notes on [[writeFingerprints]] already state for
-  //    rebuilds vs in-flight micro-batches.
+  //    rebuilds vs in-flight batches.
 
   /** The `deleted/batch=<tag>` partition directories at `path` that hold
     * at least one data file. Two duties (r16):
@@ -1458,7 +1421,7 @@ object Sink {
     import org.apache.spark.sql.functions._
     val (bExact, bBands, bPost) =
       graft.queries.TrainingOps.fingerprintTables(batch)
-    // index reads, optionally EXCLUDING one batch partition: a streaming
+    // index reads, optionally EXCLUDING one batch partition: a
     // replay passes its own tag so the probe sees the index exactly as
     // the batch's FIRST attempt did — without this, a replayed batch's
     // intra-batch duplicates (admitted together, the q95 convention)
@@ -1579,7 +1542,7 @@ object Sink {
     * 'fresh' (they are absent from the index too — the q125
     * convention). Self-match guarded (standing side anti-joins the
     * batch's own doc_ids) and batch-excludable like the other probes,
-    * so a streaming replay sees the index as its first attempt did.
+    * so a replayed batch sees the index as its first attempt did.
     * Scale: the batch pays one fingerprint pass; the standing side is
     * ONE compact row of 24 bytes per doc, exploded ×5 map-side; the
     * band join is bucket-bounded over the 2^24 keyspace (q125's
@@ -1665,11 +1628,7 @@ object Sink {
     triageOf(batch, probeFingerprints(batch, path, excludeBatch),
       path, excludeBatch)
 
-  /** [[triageBatch]] with the verdict frame supplied by the caller —
-    * the streaming flow already holds a persisted
-    * [[probeFingerprints]] result per micro-batch and must not pay the
-    * probe twice.
-    */
+  /** [[triageBatch]] with the verdict frame supplied by the caller. */
   private[graft] def triageOf(batch: DataFrame, verdicts: DataFrame,
       path: String, excludeBatch: Option[String]): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -1779,8 +1738,8 @@ object Sink {
         "vector index); rebuild it with writeVectorIndex before appending")
     writeVecTable(emb, s"$path/vectors/batch=$batch")
     // the new side is re-derived from `emb`, not read back: quantization
-    // is deterministic (exact int math), and an EMPTY batch (a streaming
-    // micro-batch whose docs were all dups) leaves a file-less partition
+    // is deterministic (exact int math), and an EMPTY batch (one whose
+    // docs were all dups) leaves a file-less partition
     // dir that parquet schema inference cannot read
     val newVt = graft.queries.TrainingOps.vectorTable(emb)
     // tombstone-filtered (X116): a pair delta must not be minted against
@@ -1910,7 +1869,7 @@ object Sink {
     * partner id (q118's order). The batch pays its own quantization;
     * the standing side contributes cell-pruned parquet reads of
     * fixed-width rows. Self-match guarded and batch-excludable like
-    * [[probeFingerprints]] (a streaming replay sees the index as its
+    * [[probeFingerprints]] (a replayed batch sees the index as its
     * first attempt did).
     */
   def probeVectorIndex(batchEmb: DataFrame, path: String,

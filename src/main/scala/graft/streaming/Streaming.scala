@@ -1,355 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.functions.Hashing
-
-/** Structured Streaming forms of the engine's window analytics. The
-  * reference is batch-only (SURVEY §2.10) — these are the capability
-  * extension: the *same* declarative aggregations as q39/q40 run
-  * incrementally under `readStream` with watermarked state eviction.
-  *
-  * Scale notes: state is keyed by (window, group) resp. (session, user);
-  * the watermark bounds state size, and partial aggregation applies
-  * map-side before the state-store shuffle — the streaming analog of the
-  * batch plan. At 100 TB/day the same pipelines run with a file or Kafka
-  * source and a checkpointed sink; nothing here is source-specific.
-  */
+/** The batch kernels of q72 and q77, written so the same code also runs
+  * over a `readStream` frame. */
 object Streaming {
-
-  /** Tumbling-window counts/sums (streaming q39). Append-mode emits each
-    * window once its end passes the watermark; late rows beyond
-    * `watermark` are dropped.
-    */
-  def tumblingAgg(events: DataFrame, watermark: String = "30 minutes",
-      width: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), Hashing.decSum(col("value")).as("sum_value"))
-      .select(col("w.start").as("win_start"), col("event_type"), col("n"),
-        col("sum_value"))
-
-  /** Session windows per user with a 30-minute gap (streaming q40).
-    *
-    * CALLER WARNING (pinned in StreamingSpec's X14 check): do NOT apply a
-    * DataFrame `filter` on `sess_start`/`sess_end` ranges to this output
-    * in BATCH mode expecting merged-session semantics — Catalyst pushes
-    * predicates on session_window grouping columns BELOW the
-    * session-merging aggregate, where they apply to the pre-merge
-    * per-event windows; an event whose own window fails the predicate is
-    * dropped before merging, which can silently split or shrink a
-    * session that SHOULD have survived the filter. Filter on collected
-    * results, or on the input rows, instead.
-    */
-  def sessionAgg(events: DataFrame, watermark: String = "30 minutes",
-      gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap).as("sw"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), Hashing.decSum(col("value")).as("sum_value"))
-      .select(col("user_id"), col("sw.start").as("sess_start"),
-        col("sw.end").as("sess_end"), col("n_events"), col("sum_value"))
-
-  /** Streaming exact dedup (the streaming form of q27): emit only the
-    * FIRST document per content hash (F1, [[Hashing.simpleHash]]), with
-    * the seen-set held in the state store via `flatMapGroupsWithState` —
-    * the custom-state operator the windowed built-ins can't express.
-    * Input needs (doc_id, text) columns; output is the surviving rows
-    * plus their hash.
-    *
-    * Scale: state is one boolean per distinct hash, partitioned by hash —
-    * the same shuffle key as the batch dedup. `stateTtl` bounds the
-    * footprint: a seen-hash entry expires after that much processing
-    * time, after which a recurring document is admitted again (the
-    * standard windowed-dedup tradeoff); None keeps state forever.
-    */
-  def dedupStream(docs: DataFrame,
-      stateTtl: Option[java.time.Duration] = None): Dataset[(String, Long, String)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val timeoutConf = if (stateTtl.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
-    docs
-      .select(Hashing.simpleHash(col("text")).as("h"), col("doc_id"), col("text"))
-      .as[(String, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (String, Long, String)](
-        OutputMode.Append(), timeoutConf) {
-        case (_, rows, state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove() // TTL expiry: forget the hash
-            Iterator.empty
-          } else if (state.exists) {
-            stateTtl.foreach(t => state.setTimeoutDuration(t.toMillis))
-            Iterator.empty
-          } else {
-            state.update(true)
-            stateTtl.foreach(t => state.setTimeoutDuration(t.toMillis))
-            // min doc_id, NOT rows.take(1): the group iterator follows
-            // shuffled partition order, so take(1) keeps an arbitrary
-            // duplicate on multi-partition sources — minBy matches the
-            // batch dedup's keep-min semantics within each micro-batch
-            Iterator.single(rows.minBy(_._2))
-          }
-      }
-  }
-
-  /** Streaming incremental dedup against the PERSISTED fingerprint index
-    * (the streaming form of q95/X74, with X76's index as the state): each
-    * micro-batch of (doc_id, text) rows is probed with
-    * [[graft.sink.Sink.probeFingerprints]] — exact content-hash tier,
-    * then LSH band buckets + exact-Jaccard verify at θ = 0.8 — its
-    * verdict rows (doc_id, verdict, dup_of, jacc) land under
-    * `outPath/run=<id>/batch=<id>/`. Verdicts are 'exact' / 'near' /
-    * 'fresh' / 'tombstoned' — the last for a doc whose id is currently
-    * tombstoned (X116): it is neither served nor (re-)admitted while the
-    * tombstone stands, so consumers must not read it as keep-worthy.
-    * The FRESH documents'
-    * fingerprints are written to the index under the batch's own
-    * (run, batch) partition, so later micro-batches dedup against both
-    * the standing corpus and everything the stream has already admitted.
-    * Both writes are per-batch-scoped Overwrites keyed by the streaming
-    * query's RUN identity (the checkpoint's own query id, which changes
-    * when a checkpoint is wiped) — idempotent under foreachBatch's
-    * at-least-once replay, and collision-free across runs that share an
-    * index or output path.
-    *
-    * Why foreachBatch rather than the state store: the dedup state here
-    * is the corpus-lifetime fingerprint index — it must outlive the
-    * query, survive restarts without checkpoint replay, stay shared with
-    * the batch flow (q95 models it, the sink maintains it), and hold
-    * band/postings tables a GroupState cannot bucket-join. foreachBatch
-    * gives each micro-batch exact batch semantics against that index;
-    * stream order stands in for crawl-day order. Within one micro-batch,
-    * duplicates of each OTHER are all admitted (the q95 convention —
-    * the batch is deduped against the index, not against itself); run
-    * [[dedupStream]] upstream when intra-batch exactness matters.
-    *
-    * Scale: a micro-batch pays its own signatures + band-collision
-    * bucket probes (the X76 contract) — never a standing-corpus rescan;
-    * the index append is one repartition per table over batch-sized
-    * rows.
-    *
-    * Optional TRIAGE tier (X107 at streaming cadence): with
-    * `triagePath` set, each micro-batch also lands its q123 sign-off
-    * page (verdict × novelty band × media verdict × quality range,
-    * [[graft.sink.Sink.triageOf]] over the SAME persisted verdict
-    * frame — the probe is never paid twice) under
-    * `triagePath/run=<id>/batch=<id>/` with the identical scoped-
-    * Overwrite replay idempotency.
-    *
-    * Optional MEDIA verdict tier (X109 at streaming cadence, r15): with
-    * `mediaPath` set, each micro-batch also lands its q127-shaped media
-    * verdict frame (doc_id, verdict, near_of, hamming —
-    * [[graft.sink.Sink.probeMediaNearDup]] against the standing `media`
-    * table, excluding the batch's own partition so a replay sees the
-    * index as its first attempt did) under
-    * `mediaPath/run=<id>/batch=<id>/`, scoped-Overwrite
-    * replay-idempotent. The index side needs nothing new: the
-    * fingerprint append below already maintains the `media` table at
-    * batch cadence, so later micro-batches read earlier admissions as
-    * standing payloads.
-    */
-  def incrementalDedup(docs: DataFrame, indexPath: String, outPath: String,
-      checkpoint: String, triagePath: Option[String] = None,
-      mediaPath: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // the run id is resolved from the checkpoint metadata ONCE (on the
-    // first batch — the file exists as soon as the query has started)
-    // and cached for the query's lifetime: re-reading it per batch
-    // meant a transient metadata-read failure during a REPLAY could
-    // mint a different tag, leaving the first attempt's verdict
-    // partition in place (duplicate verdict rows for one batchId) and
-    // splitting the batch's index rows across two run identities. With
-    // the cache, a failed first resolution fails the batch — the
-    // restart retries — and a later flake can never change the tag.
-    val cachedRun =
-      new java.util.concurrent.atomic.AtomicReference[String]()
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // IDEMPOTENT side effects for foreachBatch's at-least-once
-        // contract, along three axes:
-        //  - the partition tag is (RUN id, batchId): a replayed batch —
-        //    same checkpoint state, same id, same WAL-pinned data —
-        //    OVERWRITES its own partition (an append would duplicate
-        //    verdict rows and postings, doubling future probes'
-        //    intersection counts). The run id is the streaming query id
-        //    persisted INSIDE the checkpoint's metadata file — stable
-        //    across restarts of the same checkpoint, fresh when the
-        //    checkpoint is wiped or replaced — so two runs sharing an
-        //    index or output path get disjoint tags and can never
-        //    clobber each other's partitions (a hash of the checkpoint
-        //    PATH would collide after a wipe-and-reuse);
-        //  - probeFingerprints' self-match guard keeps a replayed doc
-        //    from reading as a duplicate of itself;
-        //  - the index append anti-joins against the ids indexed by
-        //    OTHER partitions (this batch's own partition is excluded —
-        //    otherwise a same-batch replay would see its first attempt's
-        //    rows as 'known', write an EMPTY frame over its own
-        //    partition, and erase what it admitted), so a doc
-        //    REDELIVERED in a later batch or a new run still enters the
-        //    index exactly once.
-        // query-lifetime cached (see cachedRun above): resolved on the
-        // first batch, never re-read, so the tag is stable across
-        // replays by construction
-        val run = Option(cachedRun.get).getOrElse {
-          cachedRun.compareAndSet(null, runIdTag(batch.sparkSession, checkpoint))
-          cachedRun.get
-        }
-        val tag = s"c${run}b$batchId"
-        // the probe excludes this batch's own partition so a REPLAY sees
-        // the index exactly as the first attempt did — intra-batch
-        // duplicates stay 'fresh' and the re-append reproduces, never
-        // erases, the partition. A doc whose id is TOMBSTONED (X116)
-        // gets the distinct verdict 'tombstoned' (r16): the probe's
-        // standing side is tombstone-filtered, so it would read 'fresh'
-        // — yet the admit below deliberately never re-admits it while
-        // its tombstone stands, and the next fold physically removes its
-        // old rows. The output contract now carries that divergence
-        // instead of hiding it behind a fresh-but-never-admitted row.
-        val v = graft.util.Caches.transientPersist(
-          markTombstoned(
-            graft.sink.Sink.probeFingerprints(batch, indexPath, Some(tag)),
-            indexPath, "doc_id", Seq("dup_of", "jacc")))
-        v.write.mode("overwrite")
-          .parquet(s"$outPath/run=$run/batch=$batchId")
-        triagePath.foreach { tp =>
-          graft.sink.Sink.triageOf(batch, v, indexPath, Some(tag))
-            .write.mode("overwrite")
-            .parquet(s"$tp/run=$run/batch=$batchId")
-        }
-        mediaPath.foreach { mp =>
-          markTombstoned(
-            graft.sink.Sink.probeMediaNearDup(batch, indexPath, 4, Some(tag)),
-            indexPath, "doc_id", Seq("near_of", "hamming"))
-            .write.mode("overwrite")
-            .parquet(s"$mp/run=$run/batch=$batchId")
-        }
-        // deliberately NOT tombstone-filtered (X116): a taken-down doc
-        // that re-arrives mid-stream must not be re-admitted while its
-        // tombstone stands — the compaction fold would delete the
-        // re-admitted rows along with the old ones. Re-admission after a
-        // fold behaves normally (the tombstone is gone). The 'fresh'
-        // filter below excludes such docs anyway now (their verdict is
-        // 'tombstoned'); the anti-join stays as the invariant's own
-        // guard, independent of the verdict presentation.
-        val known = batch.sparkSession.read
-          .parquet(s"$indexPath/exact")
-          .filter(col("batch") =!= tag).select("doc_id")
-        val fresh = batch
-          .join(v.filter(col("verdict") === "fresh").select("doc_id"), "doc_id")
-          .join(known, Seq("doc_id"), "left_anti")
-        graft.sink.Sink.appendFingerprints(fresh, indexPath, tag)
-        v.unpersist()
-        ()
-      }
-      .start()
-  }
-
-  /** Incremental SEMANTIC dedup as a stream (X103, the q118 flow): each
-    * micro-batch of embeddings is probed against the persisted vector
-    * index ([[graft.sink.Sink.probeVectorIndex]]), its verdicts written
-    * per (run, batch), and its FRESH vectors admitted to the index under
-    * the batch's own partition tag — the [[incrementalDedup]] lifecycle
-    * at the embedding tier, with the identical idempotency machinery
-    * (run-id tag cached for the query's lifetime; replay OVERWRITES its
-    * own verdict partition; the probe excludes the batch's own index
-    * partition so a replay sees the index exactly as the first attempt
-    * did; the admit anti-joins ids indexed by OTHER partitions). One
-    * deliberate divergence: there is no exact tier — 'near' at cos ≥
-    * the threshold subsumes it (an exact twin is cos 1.0 in its cell).
-    */
-  def incrementalSemanticDedup(emb: DataFrame, indexPath: String,
-      outPath: String, checkpoint: String,
-      threshold: Double = 0.35)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val cachedRun =
-      new java.util.concurrent.atomic.AtomicReference[String]()
-    emb.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val run = Option(cachedRun.get).getOrElse {
-          cachedRun.compareAndSet(null, runIdTag(batch.sparkSession, checkpoint))
-          cachedRun.get
-        }
-        val tag = s"c${run}b$batchId"
-        // 'tombstoned' verdict for taken-down vec_ids, the
-        // incrementalDedup contract (r16)
-        val v = graft.util.Caches.transientPersist(
-          markTombstoned(
-            graft.sink.Sink.probeVectorIndex(batch, indexPath, threshold,
-              Some(tag)),
-            indexPath, "vec_id", Seq("near_of", "cos")))
-        v.write.mode("overwrite")
-          .parquet(s"$outPath/run=$run/batch=$batchId")
-        // NOT tombstone-filtered — the incrementalDedup admit's X116 rule
-        val known = batch.sparkSession.read
-          .parquet(s"$indexPath/vectors")
-          .filter(col("batch") =!= tag).select("vec_id")
-        val fresh = batch
-          .join(v.filter(col("verdict") === "fresh").select("vec_id"),
-            "vec_id")
-          .join(known, Seq("vec_id"), "left_anti")
-        graft.sink.Sink.appendVectorIndex(fresh, indexPath, tag)
-        v.unpersist()
-        ()
-      }
-      .start()
-  }
-
-  /** Flip the verdict of rows whose `idCol` is tombstoned in the index
-    * at `indexPath` to the distinct value 'tombstoned', nulling the
-    * partner columns (r16 — the consumer-facing face of the X116 rule):
-    * such docs are served to no probe, are never re-admitted while the
-    * tombstone stands, and lose their old rows at the next fold — a
-    * 'fresh' verdict would mark them keep-worthy for an index they will
-    * never exist in. No-op (same plan) when no delete has landed; the
-    * tombstone side is deletion-request-sized (broadcast at any scale).
-    */
-  private def markTombstoned(v0: DataFrame, indexPath: String,
-      idCol: String, partnerCols: Seq[String]): DataFrame =
-    graft.sink.Sink.tombstones(v0.sparkSession, indexPath, idCol) match {
-      case Some(t) =>
-        val hit = col("__tomb").isNotNull
-        v0.join(t.withColumn("__tomb", lit(1)), Seq(idCol), "left")
-          .select(col(idCol) +:
-            when(hit, lit("tombstoned")).otherwise(col("verdict"))
-              .as("verdict") +:
-            partnerCols.map(c =>
-              when(hit, lit(null).cast(v0.schema(c).dataType))
-                .otherwise(col(c)).as(c)): _*)
-      case None => v0
-    }
-
-  /** The streaming query's RUN identity, read from the checkpoint's own
-    * `metadata` file (`{"id": "<uuid>"}`, written by Spark at query
-    * start, before any batch runs): stable across restarts of the same
-    * checkpoint, fresh whenever the checkpoint directory is wiped or
-    * replaced. First 8 hex chars of the id (dashes stripped) — enough to
-    * keep runs disjoint in partition tags. A read failure FAILS the
-    * calling batch (foreachBatch retries after restart) — the old
-    * fallback to a checkpoint-path hash could mint a second identity
-    * for the same run on a transient flake, breaking the replay
-    * idempotency the tag exists for.
-    */
-  private def runIdTag(spark: org.apache.spark.sql.SparkSession,
-      checkpoint: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$checkpoint/metadata")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val id = """"id"\s*:\s*"([0-9a-fA-F-]+)"""".r
-      .findFirstMatchIn(txt).map(_.group(1))
-      .getOrElse(sys.error(s"no id in $p"))
-    id.replace("-", "").take(8)
-  }
 
   /** The q72 filter-funnel as a streaming aggregation — the SAME
     * conditional-sum code runs batch (TrainingOps q72 calls this) and

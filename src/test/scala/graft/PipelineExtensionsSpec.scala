@@ -17,8 +17,9 @@ class PipelineExtensionsSpec extends AnyFunSuite {
 
   test("q40 gaps-and-islands form equals the built-in session_window aggregation") {
     // the r11 rewrite's contract: batch picks the cheaper equivalent
-    // plan (one user_id exchange) while the built-in stays the
-    // streaming form — equivalence pinned here on the real events table
+    // plan (one user_id exchange) over the built-in a streaming session
+    // aggregation would need — equivalence pinned here on the real
+    // events table
     import org.apache.spark.sql.functions._
     val builtin = graft.util.Tables.events(spark, TestSpark.sfDir)
       .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))

@@ -29,4 +29,11 @@ class SettingsBudgetSpec extends AnyFunSuite {
     assert(confs.size <= 5,
       s"${confs.size} spark.graft.* confs: ${confs.toSeq.sorted.mkString(", ")}")
   }
+
+  // the reference is a batch tool: src/main starts no streaming query and
+  // keeps no streaming state (q72/q77's kernels stream only in tests)
+  test("src/main names no writeStream, flatMapGroupsWithState or GroupState") {
+    val found = namesMatching("writeStream|flatMapGroupsWithState|GroupState".r)
+    assert(found.isEmpty, s"streaming pipeline code in src/main: ${found.mkString(", ")}")
+  }
 }

@@ -90,7 +90,7 @@ class SinkSpec extends AnyFunSuite {
     contracts(0 until 5).write.parquet(table)
     contracts(5 until 8).write.mode(SaveMode.Append).parquet(table)
     (0 until 8).map(i => (s"f$i", f"c$i%02d", s"C$i", "f", "main.sol",
-      "f()", "0x26121ff0", "function f() {}"))
+      "f()", "0x26121ff0", "function f() {}", true))
       .toDF(Schemas.functionSchema.fieldNames.toSeq: _*)
       .write.parquet(s"$db/function")
     def violations() = Schemas.validate(spark.read.parquet(table),
@@ -511,8 +511,8 @@ class SinkSpec extends AnyFunSuite {
         Option(r.get(2)), Option(r.get(3)))).toSeq
     assert(replayed == got, "replayed probe diverged from the first attempt")
 
-    // SAME-batch replay through the streaming closure's exact logic: the
-    // known-ids read must EXCLUDE the batch's own partition — a naive
+    // SAME-batch replay through an admit that anti-joins the known ids:
+    // the known-ids read must EXCLUDE the batch's own partition — a naive
     // known set would make the replay's anti-join empty and the scoped
     // Overwrite would then ERASE the batch's own admitted fingerprints
     val tag = "b0"
@@ -526,6 +526,23 @@ class SinkSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/shingles")
       .where(col("batch") === tag).count() == own,
       "same-batch replay erased its own partition")
+
+    // an admitted doc is in the probe's reach: an exact copy arriving
+    // in a later batch reads as its duplicate
+    locally {
+      import spark.implicits._
+      val grow = Files.createTempDirectory("graft-fp-grow").toString + "/idx"
+      val novel = "completely different words here entirely novel content"
+      Sink.writeFingerprints(
+        Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"), grow)
+      def verdict(id: Long) = Sink.probeFingerprints(
+          Seq((id, novel)).toDF("doc_id", "text"), grow)
+        .collect().map(r => (r.getString(1),
+          Option(r.getAs[java.lang.Long]("dup_of")).map(_.toLong))).head
+      assert(verdict(12L) == ("fresh", None))
+      Sink.appendFingerprints(Seq((12L, novel)).toDF("doc_id", "text"), grow, "b1")
+      assert(verdict(20L) == ("exact", Some(12L)), "the append did not grow the index")
+    }
 
     // base rebuild sweeps batch partitions AFTER the new base lands:
     // stale appended fingerprints are gone, the base survives
@@ -624,7 +641,7 @@ class SinkSpec extends AnyFunSuite {
     assert(verdicts() == before, "compaction changed probe verdicts")
 
     // a REPLAY of day2 after its partition was folded into the base,
-    // through the streaming closure's exact logic: the own-partition
+    // through an admit that anti-joins the known ids: the own-partition
     // exclusion is now a no-op (the rows live in base), so the
     // known-ids anti-join is what keeps the admit exactly-once
     val tag = "c1b1"
@@ -719,23 +736,6 @@ class SinkSpec extends AnyFunSuite {
     rel.unpersist()
   }
 
-  test("upsertJdbc: same conflict-ignore semantics against an embedded JDBC db") {
-    import spark.implicits._
-    // Spark's bundled embedded Derby — the same in-process-database shape
-    // as the reference's DuckDB file; in-memory, fresh per forked JVM
-    val url = "jdbc:derby:memory:graftsink;create=true"
-    val b1 = Seq((1L, "a"), (2L, "b"), (2L, "b-dup")).toDF("id", "v")
-    assert(Sink.upsertJdbc(b1, url, "t1", "id") == 2) // creates the table
-    assert(Sink.upsertJdbc(b1, url, "t1", "id") == 0) // rerun: conflict-ignore
-    val b2 = Seq((2L, "x"), (3L, "c")).toDF("id", "v")
-    assert(Sink.upsertJdbc(b2, url, "t1", "id") == 1) // only the fresh key
-    val out = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", "t1").load().collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out.keySet == Set(1L, 2L, 3L))
-    assert(out(2L) != "x") // existing row 2 not replaced
-  }
-
   test("probeNovelty + triageBatch against a standing index equal the session q121/q123, self-guarded") {
     import org.apache.spark.sql.functions.col
     val docs = graft.util.Tables.documents(spark, TestSpark.sfDir)
@@ -780,11 +780,11 @@ class SinkSpec extends AnyFunSuite {
     // batch: a 1-char edit of doc 1 (hamming <= 3 by the perceptual
     // property), a novel payload, and a too-short payload
     val nearCopy = "X" + (base * 2).substring(1)
-    val batch = Seq((10L, nearCopy),
-      (11L, "completely novel words that resemble neither standing payload " +
-        "and still clear the one hundred twenty five byte gram floor extra " +
-        "for sure with room to spare"),
-      (12L, "short")).toDF("doc_id", "text")
+    val novel = "completely novel words that resemble neither standing payload " +
+      "and still clear the one hundred twenty five byte gram floor extra " +
+      "for sure with room to spare"
+    val batch = Seq((10L, nearCopy), (11L, novel), (12L, "short"))
+      .toDF("doc_id", "text")
     def verdicts(ex: Option[String] = None) =
       Sink.probeMediaNearDup(batch, dir, 4, ex).collect()
         .map(r => r.getLong(0) ->
@@ -807,6 +807,12 @@ class SinkSpec extends AnyFunSuite {
     assert(verdicts(Some("m1")) == v, "replay-excluded probe diverged")
     val again = verdicts()
     assert(again(11L) == ("fresh", None), "self-match guard")
+    // the append grew the probe's reach: a 1-char edit of the admitted
+    // novel payload now reads near of it
+    val edit = Sink.probeMediaNearDup(
+      Seq((20L, "Y" + novel.substring(1))).toDF("doc_id", "text"), dir, 4)
+      .collect().map(r => (r.getString(1), Option(r.get(2)))).head
+    assert(edit == ("near", Some(11L)), edit.toString)
     // the registry TWIN: probeMediaNearDup against a standing index
     // built from the %10 split equals the session q127 (the
     // q95/q118/q121/q123 twin discipline)

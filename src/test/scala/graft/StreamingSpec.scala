@@ -1,20 +1,15 @@
 package graft
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Streaming
 
-/** Streaming window analytics driven through MemoryStream micro-batches —
-  * verifies incremental emission and watermark late-data semantics match
-  * the batch operators (q39/q40).
+/** The q72 and q77 kernels driven as bounded `availableNow` streams over
+  * the sf0.01 documents parquet must equal their batch registry answers —
+  * the same code runs batch and stream.
   */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def ts(m: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 ${m / 60}%02d:${m % 60}%02d:00")
 
   /** Stage a single parquet file into a fresh temp directory — the file
     * stream source only accepts directories.
@@ -25,499 +20,6 @@ class StreamingSpec extends AnyFunSuite {
     tmp.toFile.deleteOnExit()
     java.nio.file.Files.copy(src, tmp.resolve(src.getFileName.toString))
     tmp.toString
-  }
-
-  test("tumbling windows emit on watermark passage and drop late data") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String, Double)]
-    val q = Streaming.tumblingAgg(
-        in.toDF().toDF("ts", "event_type", "value"), "30 minutes", "1 hour")
-      .writeStream.format("memory").queryName("tumbling")
-      .outputMode("append").start()
-
-    // hour-0 events
-    in.addData((ts(5), "click", 1.0), (ts(20), "click", 2.0), (ts(40), "view", 3.0))
-    q.processAllAvailable()
-    // watermark still inside hour 0 → nothing final yet
-    assert(spark.table("tumbling").count() == 0)
-
-    // advance event time to 02:10 → watermark 01:40 > hour-0 end → emit
-    in.addData((ts(130), "click", 9.0))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("tumbling").collect()
-      .map(r => (r.getAs[Timestamp]("win_start"), r.getAs[String]("event_type"),
-        r.getAs[Long]("n"), r.getAs[Double]("sum_value"))).toSet
-    assert(rows.contains((ts(0), "click", 2L, 3.0)))
-    assert(rows.contains((ts(0), "view", 1L, 3.0)))
-    // the hour-2 window is NOT emitted (watermark hasn't passed it)
-    assert(!rows.exists(_._1 == ts(120)))
-  }
-
-  test("late rows beyond the watermark are dropped, not re-aggregated") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String, Double)]
-    val q = Streaming.tumblingAgg(
-        in.toDF().toDF("ts", "event_type", "value"), "30 minutes", "1 hour")
-      .writeStream.format("memory").queryName("late")
-      .outputMode("append").start()
-    in.addData((ts(10), "click", 1.0))
-    q.processAllAvailable()
-    in.addData((ts(200), "click", 1.0)) // watermark → 02:50
-    q.processAllAvailable()
-    in.addData((ts(15), "click", 100.0)) // late into the already-final hour 0
-    q.processAllAvailable()
-    q.stop()
-    val hour0 = spark.table("late").collect()
-      .filter(_.getAs[Timestamp]("win_start") == ts(0))
-    assert(hour0.length == 1)
-    assert(hour0.head.getAs[Long]("n") == 1L) // the late row did not reopen it
-  }
-
-  test("stateful dedup emits only the first document per content hash") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.dedupStream(in.toDF().toDF("doc_id", "text"))
-      .toDF("h", "doc_id", "text")
-      .writeStream.format("memory").queryName("dedup")
-      .outputMode("append").start()
-    // batch 1: two distinct texts, one intra-batch duplicate
-    in.addData((1L, "alpha beta"), (2L, "alpha  beta"), (3L, "gamma"))
-    q.processAllAvailable()
-    // batch 2: cross-batch duplicate (whitespace-insensitive) + one new
-    in.addData((4L, "alphabeta"), (5L, "delta"))
-    q.processAllAvailable()
-    q.stop()
-    val survivors = spark.table("dedup").collect()
-      .map(_.getAs[Long]("doc_id")).toSet
-    // 2 dupes 1 (same stripped text), 4 dupes 1 across batches
-    assert(survivors == Set(1L, 3L, 5L))
-  }
-
-  test("availableNow file stream equals the batch aggregation (X13 on sf0.01)") {
-    import org.apache.spark.sql.functions._
-    // the SAME tumblingAgg code that streams in production, driven as a
-    // bounded availableNow run over the real sf0.01 events parquet, must
-    // reproduce the batch aggregation exactly — the driver-visible
-    // batch-equals-stream check behind the "same code streams" claim.
-    // Append mode can only emit windows the final watermark passed
-    // (end ≤ max event time at delay 0); the batch side is filtered to
-    // that same emittable set before comparing.
-    val dir = "/root/testdata/sf0.01"
-    val batchEvents = graft.util.Tables.events(spark, dir)
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // the file stream source wants a DIRECTORY of files; stage the single
-    // table file into one (what a production landing zone looks like)
-    val streamEvents = graft.util.Tables.normalizeEventTs(
-      spark.readStream.schema(rawSchema)
-        .parquet(stageDir(s"$dir/events.parquet")))
-    val q = Streaming.tumblingAgg(streamEvents, watermark = "0 seconds")
-      .writeStream.format("memory").queryName("an_tumbling")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("an_tumbling").collect()
-      .map(r => (r.getAs[Timestamp]("win_start"), r.getAs[String]("event_type"),
-        r.getAs[Long]("n"), r.getAs[Double]("sum_value"))).toSet
-    val maxTs = batchEvents.agg(max(col("ts"))).head.getTimestamp(0)
-    // watermark is a no-op on a batch frame, so this is the plain batch agg
-    val want = Streaming.tumblingAgg(batchEvents)
-      .filter(expr("win_start + INTERVAL 1 HOUR") <= lit(maxTs))
-      .collect()
-      .map(r => (r.getAs[Timestamp]("win_start"), r.getAs[String]("event_type"),
-        r.getAs[Long]("n"), r.getAs[Double]("sum_value"))).toSet
-    assert(want.nonEmpty && got == want,
-      s"stream=${got.size} rows, batch=${want.size} rows")
-  }
-
-  test("availableNow dedup stream equals the batch exact-dedup (X32 on sf0.01)") {
-    import org.apache.spark.sql.functions._
-    // one forced micro-batch so first-seen == global keep-min, making the
-    // streaming survivors comparable row-for-row with q27's batch dedup
-    val dir = "/root/testdata/sf0.01"
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val streamDocs = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "10000")
-      .parquet(stageDir(s"$dir/documents.parquet"))
-    val q = Streaming.dedupStream(streamDocs)
-      .toDF("h", "doc_id", "text")
-      .writeStream.format("memory").queryName("an_dedup")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("an_dedup").collect()
-      .map(r => (r.getAs[String]("h"), r.getAs[Long]("doc_id"))).toSet
-    val want = docs
-      .select(graft.functions.Hashing.simpleHash(col("text")).as("h"), col("doc_id"))
-      .groupBy("h").agg(min(col("doc_id")).as("keep_id"))
-      .collect()
-      .map(r => (r.getAs[String]("h"), r.getAs[Long]("keep_id"))).toSet
-    assert(want.nonEmpty && got == want,
-      s"stream=${got.size} rows, batch=${want.size} rows")
-  }
-
-  test("incremental dedup stream: probes the persisted index, admits fresh docs into it") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-incdedup-")
-      .toFile.getAbsolutePath
-    val toks = (1 to 30).map(i => s"tok$i") // 30 distinct tokens
-    val textB = toks.mkString(" ")
-    val nearB = (toks.init :+ "tokX").mkString(" ") // only the last 3-shingle differs: jacc 27/29
-    // standing corpus: doc 1 (short) and doc 2 (the 30-token text)
-    graft.sink.Sink.writeFingerprints(
-      Seq((1L, "alpha beta gamma delta"), (2L, textB)).toDF("doc_id", "text"),
-      s"$tmp/index")
-
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.incrementalDedup(
-      in.toDF().toDF("doc_id", "text"),
-      s"$tmp/index", s"$tmp/out", s"$tmp/ck",
-      triagePath = Some(s"$tmp/triage"))
-    try {
-      // batch 1: exact copy of 1, near-dup of 2, and a novel doc
-      in.addData((10L, "alpha beta gamma delta"), (11L, nearB),
-        (12L, "completely different words here entirely novel content stream"))
-      q.processAllAvailable()
-      // batch 2: exact copy of the doc ADMITTED in batch 1 — proves the
-      // index grew mid-stream
-      in.addData((20L, "completely different words here entirely novel content stream"))
-      q.processAllAvailable()
-      val postingsAfterAdmit = spark.read.parquet(s"$tmp/index/shingles").count()
-      // batch 3: doc 12 REDELIVERED (offset-reset shape) — the self-match
-      // guard keeps it from reading as its own duplicate, and the
-      // known-ids anti-join keeps its fingerprints from entering twice
-      in.addData((12L, "completely different words here entirely novel content stream"))
-      q.processAllAvailable()
-      assert(spark.read.parquet(s"$tmp/index/shingles").count()
-        == postingsAfterAdmit, "redelivered doc duplicated in the index")
-      // batch 4 (X116): docs 2 and 12 are taken down MID-STREAM — the
-      // very next micro-batch's probe honors the tombstones (a fresh
-      // near-dup of 2's text reads fresh; the redelivered 12 reads
-      // 'tombstoned', the r16 consumer-facing verdict), and the admit
-      // does NOT re-admit a tombstoned id while its tombstone stands
-      // (the known-ids read is deliberately unfiltered — see the
-      // incrementalDedup admit comment)
-      graft.sink.Sink.deleteFingerprints(
-        Seq(2L, 12L).toDF("doc_id"), s"$tmp/index", "t0")
-      in.addData((30L, nearB),
-        (12L, "completely different words here entirely novel content stream"))
-      q.processAllAvailable()
-      assert(spark.read.parquet(s"$tmp/index/shingles")
-        .filter(col("doc_id") === 12L)
-        .select("batch").distinct().count() == 1,
-        "tombstoned doc re-admitted under a new partition")
-      assert(spark.read.parquet(s"$tmp/index/shingles")
-        .filter(col("doc_id") === 30L).count() > 0,
-        "the genuinely-new doc must still be admitted")
-    } finally q.stop()
-
-    val out = spark.read.parquet(s"$tmp/out").collect()
-      .map(r => (r.getAs[Number]("batch").longValue(), r.getAs[Long]("doc_id")) ->
-        (r.getAs[String]("verdict"), Option(r.getAs[java.lang.Long]("dup_of"))
-          .map(_.toLong))).toMap
-    assert(out((0L, 10L)) == ("exact", Some(1L)))
-    assert(out((0L, 11L))._1 == "near" && out((0L, 11L))._2 == Some(2L))
-    assert(out((0L, 12L)) == ("fresh", None))
-    assert(out((1L, 20L)) == ("exact", Some(12L)),
-      s"index did not grow: ${out((1L, 20L))}")
-    // the redelivered doc is not its own duplicate (guard), and its
-    // near-dup relation to OTHER index docs is unchanged: 20 was never
-    // admitted (exact dup), so 12's only index presence is itself
-    assert(out((2L, 12L)) == ("fresh", None))
-    // post-takedown batch: the near-dup of the tombstoned doc 2 reads
-    // FRESH (the standing side no longer serves it); the tombstoned,
-    // redelivered 12 carries the DISTINCT verdict 'tombstoned' (r16 —
-    // it will never be admitted while the tombstone stands, so a
-    // 'fresh' verdict would mislead downstream keep decisions)
-    assert(out((3L, 30L)) == ("fresh", None),
-      "near-dup of a taken-down doc must read fresh")
-    assert(out((3L, 12L)) == ("tombstoned", None),
-      "redelivered tombstoned doc must carry the 'tombstoned' verdict")
-
-    // the per-batch TRIAGE page: batch 0's three docs land one per
-    // (verdict, band) cell — the exact copy and the near-dup read
-    // dup_heavy (their shingles are overwhelmingly standing), the
-    // novel doc reads novel; the redelivered batch-2 doc must read
-    // (fresh, novel) again — probeNovelty's self-guard keeps its own
-    // batch-0 postings from flagging it as seen
-    def triage(b: Long): Map[(String, String), Long] =
-      spark.read.parquet(s"$tmp/triage")
-        .filter(col("batch") === b).collect()
-        .map(r => (r.getAs[String]("verdict"), r.getAs[String]("band")) ->
-          r.getAs[Long]("n_docs")).toMap
-    assert(triage(0L) == Map(
-      ("exact", "dup_heavy") -> 1L,
-      ("near", "dup_heavy") -> 1L,
-      ("fresh", "novel") -> 1L))
-    assert(triage(2L) == Map(("fresh", "novel") -> 1L))
-    // the post-takedown batch's page: the near-dup of the tombstoned 2
-    // reads fresh+novel (the standing side no longer serves 2 to any
-    // dimension); the tombstoned redelivered 12 lands in its own
-    // 'tombstoned' verdict cell (r16) — the sign-off page shows the
-    // operator exactly which rows are takedown-blocked
-    assert(triage(3L) == Map(
-      ("fresh", "novel") -> 1L,
-      ("tombstoned", "novel") -> 1L))
-  }
-
-  test("media verdict stream: admit, index growth, and redelivery idempotency") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-incmedia-")
-      .toFile.getAbsolutePath
-    // payloads must clear the 125-byte fingerprint floor; shingle
-    // content is irrelevant here (the media tier is byte-level)
-    val standing = ("the standing payload with plenty of bytes to " +
-      "fingerprint reliably and then some more filler words to be safe " +
-      "well past the floor") * 2
-    graft.sink.Sink.writeFingerprints(
-      Seq((1L, standing)).toDF("doc_id", "text"), s"$tmp/index")
-
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.incrementalDedup(
-      in.toDF().toDF("doc_id", "text"),
-      s"$tmp/index", s"$tmp/out", s"$tmp/ck",
-      triagePath = Some(s"$tmp/triage"),
-      mediaPath = Some(s"$tmp/media"))
-    val novel = ("a completely different long payload whose byte profile " +
-      "shares nothing with the standing document and which also clears " +
-      "the fingerprint floor easily") * 2
-    try {
-      // batch 0: a 1-char edit of the standing payload (media-near), a
-      // novel long payload (media-fresh), a below-floor payload (fresh
-      // by the spine convention)
-      in.addData((10L, "X" + standing.substring(1)), (11L, novel),
-        (12L, "short"))
-      q.processAllAvailable()
-      // batch 1: a 1-char edit of the payload ADMITTED in batch 0 —
-      // proves the stream maintains the media table mid-run
-      in.addData((20L, "Y" + novel.substring(1)))
-      q.processAllAvailable()
-      // batch 2: doc 11 REDELIVERED (offset-reset shape) — the probe's
-      // self-match guard keeps it from reading as its own near-dup,
-      // and doc 20 (its lexical near-dup) was never admitted, so 11
-      // must read media-fresh again, exactly as its first attempt did
-      in.addData((11L, novel))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    def media(b: Long): Map[Long, (String, Option[Long], Option[Int])] =
-      spark.read.parquet(s"$tmp/media")
-        .filter(col("batch") === b).collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          ((r.getAs[String]("verdict"),
-            Option(r.getAs[java.lang.Long]("near_of")).map(_.toLong),
-            Option(r.getAs[java.lang.Integer]("hamming")).map(_.toInt))))
-        .toMap
-    val b0 = media(0L)
-    assert(b0(10L)._1 == "near" && b0(10L)._2 == Some(1L)
-      && b0(10L)._3.exists(_ <= 4), b0.toString)
-    assert(b0(11L) == ("fresh", None, None))
-    assert(b0(12L) == ("fresh", None, None), "below-floor payload must read fresh")
-    // the media table grew mid-stream: batch 1's edit of doc 11 reads
-    // near against the batch-0 admission
-    val b1 = media(1L)
-    assert(b1(20L)._1 == "near" && b1(20L)._2 == Some(11L), b1.toString)
-    // redelivered doc 11: the probe's self-match guard plus the
-    // batch-exclusion keep it fresh (not its own duplicate), exactly
-    // as its first attempt read
-    val b2 = media(2L)
-    assert(b2(11L) == ("fresh", None, None), b2.toString)
-
-    // the streamed TRIAGE page carries the media dimension (r15): batch
-    // 0's media-near doc and its media-fresh docs land in SEPARATE
-    // cells — the composition holds at streaming cadence, not just in
-    // the batch q123
-    val tri0 = spark.read.parquet(s"$tmp/triage")
-      .filter(col("batch") === 0L).collect()
-      .map(r => (r.getAs[String]("verdict"), r.getAs[String]("media")) ->
-        r.getAs[Long]("n_docs")).toMap
-    assert(tri0.keySet.map(_._2) == Set("near", "fresh"), tri0.toString)
-    assert(tri0.filter(_._1._2 == "near").values.sum == 1L, tri0.toString)
-
-    // q127-identity of the streamed frame: the landed batch-0 page IS
-    // probeMediaNearDup's verdict frame for that batch against the
-    // index as the batch saw it (excluding everything admitted at or
-    // after its own tag — here only its own partition existed)
-    val batch0 = Seq((10L, "X" + standing.substring(1)), (11L, novel),
-      (12L, "short")).toDF("doc_id", "text")
-    val idxTags = spark.read.parquet(s"$tmp/index/media")
-      .select("batch").distinct().collect().map(_.getString(0)).toSet
-    val laterTags = idxTags.filter(_ != "base")
-    val standingOnly = spark.read.parquet(s"$tmp/index/media")
-      .filter(col("batch") === "base")
-    assert(laterTags.nonEmpty && standingOnly.count() == 1)
-    val reprobe = graft.sink.Sink.probeMediaNearDup(
-      batch0, s"$tmp/index", 4,
-      excludeBatch = None).collect() // full index: 10/11 now indexed
-    // with the full index the self-match guard still holds: no doc
-    // reads itself as its partner
-    assert(reprobe.forall(r =>
-      Option(r.get(2)).forall(_ != r.getLong(0))), "self-match leaked")
-  }
-
-  test("triage partition heals a mid-write crash on replay (scoped overwrite, stable run id)") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-triagecrash-")
-      .toFile.getAbsolutePath
-    graft.sink.Sink.writeFingerprints(
-      Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"),
-      s"$tmp/index")
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    def start(ck: String) = Streaming.incrementalDedup(
-      in.toDF().toDF("doc_id", "text"),
-      s"$tmp/index", s"$tmp/out", ck,
-      triagePath = Some(s"$tmp/triage"))
-    val q1 = start(s"$tmp/ck")
-    try {
-      in.addData((10L, "alpha beta gamma delta"),
-        (11L, "completely different words here entirely novel content"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    def triageRows() = spark.read.parquet(s"$tmp/triage")
-      .collect().map(_.toString).sorted.toSeq
-    def outRows() = spark.read.parquet(s"$tmp/out")
-      .collect().map(_.toString).sorted.toSeq
-    val triage0 = triageRows()
-    val out0 = outRows()
-
-    // simulate the MID-WRITE crash: a replay attempt died half-way
-    // through the triage partition write — an orphan task file sits
-    // beside the good ones and the _SUCCESS marker is gone. The
-    // corruption must be VISIBLE before the replay (else the test
-    // pins nothing).
-    val runDir = new java.io.File(s"$tmp/triage").listFiles()
-      .filter(_.getName.startsWith("run=")).head
-    val batchDir = runDir.listFiles().filter(_.getName == "batch=0").head
-    val part = batchDir.listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(part.toPath,
-      batchDir.toPath.resolve("part-99999-orphan.snappy.parquet"))
-    java.nio.file.Files.deleteIfExists(
-      batchDir.toPath.resolve("_SUCCESS"))
-    assert(triageRows() != triage0, "tampering must be visible")
-
-    // force the at-least-once replay: restart from a CRASH SNAPSHOT of
-    // the checkpoint — offsets for batch 0 present, its COMMIT marker
-    // gone (exactly the window in which foreachBatch replays). A copied
-    // path rather than in-place surgery: Spark 4's in-JVM
-    // same-checkpoint guard rejects a commit log whose disk state moved
-    // backwards under a path this JVM already wrote. The run id is
-    // resolved from the checkpoint's METADATA file, which the copy
-    // preserves — so the replay's scoped Overwrite targets the SAME
-    // run=<id> partition, which is the property under test.
-    def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-      java.nio.file.Files.walk(src).forEach { p =>
-        val t = dst.resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t)
-      }
-    }
-    copyDir(java.nio.file.Paths.get(s"$tmp/ck"),
-      java.nio.file.Paths.get(s"$tmp/ck2"))
-    assert(java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$tmp/ck2/commits/0")))
-    // the local FS keeps a checksum twin; left behind it makes the
-    // commit rewrite throw FileAlreadyExistsException
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$tmp/ck2/commits/.0.crc"))
-    val q2 = start(s"$tmp/ck2")
-    try q2.processAllAvailable() finally q2.stop()
-
-    assert(new java.io.File(s"$tmp/triage").listFiles()
-      .count(_.getName.startsWith("run=")) == 1,
-      "replay minted a second run identity")
-    assert(triageRows() == triage0,
-      "replay did not heal the half-written triage partition")
-    assert(outRows() == out0, "replay duplicated verdict rows")
-    // the index admit replayed under the same tag too: exactly one
-    // batch partition beyond base
-    val tags = new java.io.File(s"$tmp/index/shingles").listFiles()
-      .map(_.getName).filter(_.startsWith("batch=")).sorted.toSeq
-    assert(tags.size == 2 && tags.contains("batch=base"), tags.toString)
-  }
-
-  test("session windows merge within gap and split across it") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, Long, Double)]
-    val q = Streaming.sessionAgg(
-        in.toDF().toDF("ts", "user_id", "value"), "30 minutes", "30 minutes")
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    // user 1: 00:00,00:10,00:20 (one session) then 01:30 (new session)
-    in.addData((ts(0), 1L, 1.0), (ts(10), 1L, 1.0), (ts(20), 1L, 1.0),
-      (ts(90), 1L, 5.0))
-    q.processAllAvailable()
-    in.addData((ts(300), 1L, 0.0)) // push watermark far past both sessions
-    q.processAllAvailable()
-    q.stop()
-    val sess = spark.table("sessions").collect()
-      .map(r => (r.getAs[Timestamp]("sess_start"), r.getAs[Long]("n_events"),
-        r.getAs[Double]("sum_value")))
-      .filter(_._1.before(ts(200))).sortBy(_._1.getTime)
-    assert(sess.length == 2)
-    assert(sess(0) == ((ts(0), 3L, 3.0)))
-    assert(sess(1) == ((ts(90), 1L, 5.0)))
-  }
-
-  test("availableNow session stream equals the batch session aggregation (X14 on sf0.01)") {
-    import org.apache.spark.sql.functions._
-    // the session-window sibling of the X13 check: the SAME sessionAgg
-    // code, driven availableNow over the real events parquet, must equal
-    // the batch computation on every session the final watermark closed
-    // (append mode emits a session once the watermark passes its end)
-    val dir = "/root/testdata/sf0.01"
-    val batchEvents = graft.util.Tables.events(spark, dir)
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val streamEvents = graft.util.Tables.normalizeEventTs(
-      spark.readStream.schema(rawSchema)
-        .parquet(stageDir(s"$dir/events.parquet")))
-    val q = Streaming.sessionAgg(streamEvents, watermark = "0 seconds")
-      .writeStream.format("memory").queryName("an_sessions")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[Long]("user_id"), r.getAs[Timestamp]("sess_start"),
-        r.getAs[Timestamp]("sess_end"), r.getAs[Long]("n_events"),
-        r.getAs[Double]("sum_value"))
-    val got = spark.table("an_sessions").collect().map(key).toSet
-    val maxTs = batchEvents.agg(max(col("ts"))).head.getTimestamp(0)
-    // Two traps pinned here:
-    //  1. The emittable filter must run DRIVER-SIDE on the collected
-    //     rows. A DataFrame filter on `sess_end` gets pushed BELOW the
-    //     session-merging aggregate (Catalyst treats session_window as an
-    //     ordinary grouping column), where it applies to the PRE-MERGE
-    //     per-event windows — an event whose own 30-min window ends past
-    //     the cutoff is dropped before merging, silently resurrecting an
-    //     unmerged fragment of its session (observed: user 12's 2-event
-    //     session came back as an n=1 fragment).
-    //  2. The event-time watermark is tracked in MILLISECONDS: the final
-    //     watermark is the max event time FLOORED to ms, so a session
-    //     whose µs-precise end lands in the truncated sliver stays open.
-    //     (The tumbling X13 check sees neither: window start/end are
-    //     hour-aligned constants with no sub-ms part, and its filter
-    //     pushes below a tumbling groupBy harmlessly — tumbling windows
-    //     never merge.)
-    val wmMicros = maxTs.toInstant.toEpochMilli * 1000L
-    def endMicros(t: Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-    val want = Streaming.sessionAgg(batchEvents)
-      .collect().map(key)
-      .filter(t => endMicros(t._3) <= wmMicros).toSet
-    assert(want.nonEmpty && got == want,
-      s"stream=${got.size} rows, batch=${want.size} rows, " +
-        s"onlyStream=${(got -- want).take(3)}, onlyBatch=${(want -- got).take(3)}")
   }
 
   test("availableNow funnel stream equals the batch filter funnel (X50 on sf0.01)") {

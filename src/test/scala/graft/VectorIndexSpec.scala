@@ -306,44 +306,4 @@ class VectorIndexSpec extends AnyFunSuite {
     val out = df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out(10L) == "near")
   }
-
-  test("streaming flow: probes the index, admits fresh vectors, replay-safe") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.Streaming
-    val tmp = java.nio.file.Files.createTempDirectory("graft-vecstream-")
-      .toFile.getAbsolutePath
-    graft.sink.Sink.writeVectorIndex(
-      Seq((1L, Seq(1f, 0f, 0f, 0f), 0), (2L, Seq(0f, 0f, 1f, 1f), 1))
-        .toDF("vec_id", "embedding", "label"), s"$tmp/index")
-
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Seq[Float], Int)]
-    val q = Streaming.incrementalSemanticDedup(
-      in.toDF().toDF("vec_id", "embedding", "label"),
-      s"$tmp/index", s"$tmp/out", s"$tmp/ck")
-    try {
-      // batch 0: a near of 1 and a novel vector
-      in.addData((10L, Seq(1f, 0.1f, 0f, 0f), 0), (11L, Seq(0f, 1f, 0f, 0f), 0))
-      q.processAllAvailable()
-      // batch 1: identical to the vector ADMITTED in batch 0
-      in.addData((20L, Seq(0f, 1f, 0f, 0f), 0))
-      q.processAllAvailable()
-      val rowsAfterAdmit = spark.read.parquet(s"$tmp/index/vectors").count()
-      // batch 2: vector 11 REDELIVERED — self-guard + known-ids anti-join
-      in.addData((11L, Seq(0f, 1f, 0f, 0f), 0))
-      q.processAllAvailable()
-      assert(spark.read.parquet(s"$tmp/index/vectors").count()
-        == rowsAfterAdmit, "redelivered vector duplicated in the index")
-    } finally q.stop()
-
-    val out = spark.read.parquet(s"$tmp/out").collect()
-      .map(r => (r.getAs[Number]("batch").longValue(), r.getAs[Long]("vec_id")) ->
-        (r.getAs[String]("verdict"), Option(r.getAs[java.lang.Long]("near_of"))
-          .map(_.toLong))).toMap
-    assert(out((0L, 10L))._1 == "near" && out((0L, 10L))._2 == Some(1L))
-    assert(out((0L, 11L)) == ("fresh", None))
-    assert(out((1L, 20L)) == ("near", Some(11L)), "index did not grow")
-    assert(out((2L, 11L)) == ("fresh", None), "redelivery must not self-match")
-  }
 }
